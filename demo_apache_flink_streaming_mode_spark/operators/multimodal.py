@@ -10,55 +10,47 @@ same and is what this module implements and tests.
 Codec status: every modality has a REAL decode path for at least one
 uncompressed container, all pure stdlib — audio via ``wave`` RIFF
 parsing (``wav_decode_features``), images via ``struct`` BMP/DIB
-parsing (``bmp_decode_features``: file header, BITMAPINFOHEADER,
-palette, bottom-up padded rows), video via ``struct`` RIFF/AVI chunk
-walking (``avi_decode_frames``: hdrl/avih header, movi '00db' frame
-chunks, even-byte padding). Images additionally have THREE REAL
-COMPRESSED paths: lossless PNG (``png_decode_features``: chunk walk +
-CRC32 verification, DEFLATE decompression through the FROM-SCRATCH
-RFC 1950/1951 ``_inflate`` — stored/fixed/dynamic blocks, canonical
-Huffman, LZ77 back-references, hand-computed Adler-32 — decoding
-bitstreams stdlib zlib PRODUCED, i.e. interop with an independent
-implementation, plus full five-filter scanline reconstruction), lossless
-GIF89a with FROM-SCRATCH variable-width LZW on both sides
-(``gif_decode_features``: 9->12-bit code progression, clear-code
-table resets, the KwKwK corner, sub-block framing — a genuine
-adaptive dictionary coder, no stdlib compression involved), and lossy
-baseline JPEG built from scratch on stdlib ``struct`` + numpy
-(``jpeg_decode_features``: per-block DCT, quantization, zigzag +
-DC-differential RLE, Annex-K standard-table Huffman entropy coding,
-0xFF byte stuffing — with a provable reconstruction-error bound).
-Video has a REAL COMPRESSED path via Motion-JPEG in AVI
-(``mjpeg_decode_frames``), and audio via a from-scratch FLAC subset
-(``flac_decode_features``: fixed linear predictors, Rice-coded
-residuals, frame CRC-8/16 + STREAMINFO MD5, all verified on decode).
-Motion-compensated prediction itself is covered from scratch by the
-MCV codecs (``mcv_decode_frames``: exhaustive block-matching motion
-estimation; ``mcv2_decode_frames``: half-pel sub-pixel motion;
-``mcv3_decode_frames``: rate-based SKIP/INTER/INTRA mode decisions +
-adaptive binary range coding), bidirectional (B-frame) motion by MCV4
-(``mcv4_decode_frames``), and psychoacoustic bit allocation by
-the PAC1 codec (``pac_decode_features``). What still needs codec libraries not
-present in this container is bit-exact compliance with the named
-standards' bitstream syntaxes (H.264/MP3/AAC), so the generic
-``decode_features``/``resize_media``/``sample_frames`` kernels keep
-their ``codec="fake"`` deterministic byte-math path and raise
-NotImplementedError for ``codec="real"``. Everything around the
-kernels — binary ingest, chunk manifest, Arrow batching, output
-schemas — is real.
+parsing (``bmp_decode_features``), video via RIFF/AVI chunk walking
+(``avi_decode_frames``). Compressed paths, all from scratch: lossless
+PNG (``png_decode_features``: RFC 1950/1951 inflate of streams stdlib
+zlib produced, all five scanline filters), GIF89a variable-width LZW
+(``gif_decode_features``), baseline JPEG (``jpeg_decode_features``,
+with a provable reconstruction-error bound), Motion-JPEG in AVI
+(``mjpeg_decode_frames``), a FLAC subset (``flac_decode_features``),
+FLIC line deltas (``flic_decode_frames``), MDCT transform audio
+(``mdct_decode_features``) with psychoacoustic allocation on top
+(``pac_decode_features``), and motion-compensated video: block
+matching (``mcv_decode_frames``), half-pel (``mcv2``), rate-decided
+modes with range coding (``mcv3``) and B-frames (``mcv4``).
+
+Shared plumbing: every bit-level codec reads and writes through
+``operators.bitstream`` (one MSB and one LSB writer/reader pair, one
+canonical-Huffman assignment and symbol decode, one Rice coder), and
+every kernel is one per-blob row function handed to
+:func:`_codec_kernel`, the single Arrow-batched ``mapInPandas`` shape.
+What still needs codec libraries not present in this container is
+bit-exact compliance with the named standards' bitstream syntaxes
+(H.264/MP3/AAC), so the generic ``decode_features``/``resize_media``/
+``sample_frames`` kernels keep their ``codec="fake"`` deterministic
+byte-math path and raise NotImplementedError for ``codec="real"``.
 """
 
 from __future__ import annotations
 
+import functools
 import io
 import struct
 import wave
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 from typing import Literal
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from demo_apache_flink_streaming_mode_spark.operators.bitstream import (
+    LsbReader, LsbWriter, MsbReader, MsbWriter, canonical_table,
+    encode_table, read_symbol, rice_get, rice_put, unzigzag, zigzag)
 
 CHUNK_BYTES = 64 * 1024
 
@@ -100,6 +92,51 @@ def media_manifest(media: DataFrame) -> DataFrame:
     )
 
 
+def _codec_kernel(media: DataFrame, schema: str,
+                  rows_of: Callable[..., Iterable[tuple]],
+                  extra: tuple[str, ...] = ()) -> DataFrame:
+    """The one Arrow-batched ``mapInPandas`` shape every media and
+    compression kernel shares. ``rows_of(payload, *extra_values)`` runs
+    once per blob (``payload`` as ``bytes``, then the blob's ``extra``
+    columns) and returns that blob's output rows as tuples, each
+    prefixed here with the blob's ``doc_id`` — so 1 -> N frame fan-out
+    and 1 -> 0 (empty streams) need nothing special."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = [(doc_id, *row)
+                    for doc_id, payload, *more in zip(
+                        pdf["doc_id"], pdf["media"], *(pdf[c] for c in extra))
+                    for row in rows_of(bytes(payload), *more)]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return media.mapInPandas(kernel, schema=schema)
+
+
+def _px_stats(px) -> tuple[int, float]:
+    """(max, mean) of a byte sequence; (0, 0.0) when empty. The mean is
+    one exact-int sum divided once, so the SQL oracle's double is
+    bit-identical."""
+    return (max(px), sum(px) / len(px)) if px else (0, 0.0)
+
+
+def _frame_rows(frames: list[bytes], w: int, h: int,
+                kinds=None) -> list[tuple]:
+    """Per-frame output rows of the lossless video codecs: index, count,
+    geometry, the frame's kind (``kinds[i]``, by default the key-frame
+    flag ``i == 0``) and the reconstructed pixels' max/mean."""
+    return [(i, len(frames), w, h, i == 0 if kinds is None else kinds[i],
+             *_px_stats(f)) for i, f in enumerate(frames)]
+
+
+def _real_unsupported(codec: str, what: str) -> None:
+    if codec == "real":
+        raise NotImplementedError(
+            f"real {what} requires media libraries not bundled in this "
+            "environment; use codec='fake' for the pipeline-shape path")
+
+
 def decode_features(media: DataFrame, codec: Literal["fake", "real"] = "fake",
                     dim: int = 8) -> DataFrame:
     """Feature extraction over binary media via Arrow-batched mapInPandas.
@@ -109,27 +146,15 @@ def decode_features(media: DataFrame, codec: Literal["fake", "real"] = "fake",
     "fake" codec derives a deterministic feature vector from byte
     statistics so tests can assert the full pipeline shape end-to-end.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real media decode requires image/audio libraries not "
-                    "bundled in this environment; use codec='fake' for the "
-                    "pipeline-shape path")
-            feats = [
-                [float(len(b)), float(b[0] if b else 0), float(b[-1] if b else 0),
-                 float(sum(b[:64]) % 997)] + [float((len(b) >> s) & 0xFF)
-                                              for s in range(dim - 4)]
-                for b in pdf["media"]
-            ]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": [len(b) for b in pdf["media"]],
-                "feature": feats,
-            })
+    _real_unsupported(codec, "media decode")
 
-    return media.mapInPandas(kernel, schema=FEATURE_SCHEMA)
+    def rows(b: bytes, media_type: str):
+        feat = ([float(len(b)), float(b[0] if b else 0),
+                 float(b[-1] if b else 0), float(sum(b[:64]) % 997)]
+                + [float((len(b) >> s) & 0xFF) for s in range(dim - 4)])
+        return [(media_type, len(b), feat)]
+
+    return _codec_kernel(media, FEATURE_SCHEMA, rows, extra=("media_type",))
 
 
 WAV_RATE = 8000
@@ -142,42 +167,27 @@ def wav_decode_features(media: DataFrame) -> DataFrame:
 
     Each payload is containerized as an 8-bit mono WAV (RIFF header +
     the payload as PCM frames) and then decoded back through
-    ``wave.open`` — actual RIFF chunk-walking, not byte math — inside
-    the same Arrow-batched mapInPandas shape as the other kernels. This
-    is the one "real"-codec path that needs nothing beyond the stdlib;
-    image/video stay declared stubs.
+    ``wave.open`` — actual RIFF chunk-walking, not byte math.
 
     Oracle-able because the PCM frames ARE the payload bytes: frame
     count and amplitude statistics are SQL-expressible over the text's
     byte values. The mean is one exact-int sum divided once — both
     engines produce the identical double.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_frames", "sample_rate",
-                                    "n_channels", "samp_width", "max_amp",
-                                    "mean_amp")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(1)
-                    w.setframerate(WAV_RATE)
-                    w.writeframes(bytes(payload))
-                buf.seek(0)
-                with wave.open(buf, "rb") as r:
-                    frames = r.readframes(r.getnframes())
-                    rows["doc_id"].append(doc_id)
-                    rows["n_frames"].append(r.getnframes())
-                    rows["sample_rate"].append(r.getframerate())
-                    rows["n_channels"].append(r.getnchannels())
-                    rows["samp_width"].append(r.getsampwidth())
-                    rows["max_amp"].append(max(frames) if frames else 0)
-                    rows["mean_amp"].append(
-                        sum(frames) / len(frames) if frames else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(1)
+            w.setframerate(WAV_RATE)
+            w.writeframes(payload)
+        buf.seek(0)
+        with wave.open(buf, "rb") as r:
+            frames = r.readframes(r.getnframes())
+            return [(r.getnframes(), r.getframerate(), r.getnchannels(),
+                     r.getsampwidth(), *_px_stats(frames))]
 
-    return media.mapInPandas(kernel, schema=WAV_SCHEMA)
+    return _codec_kernel(media, WAV_SCHEMA, rows)
 
 
 BMP_WIDTH = 64  # pixels per row; 8bpp stride 64 is already 4-byte aligned
@@ -208,43 +218,28 @@ def bmp_decode_features(media: DataFrame) -> DataFrame:
     8-bit grayscale BMP (``_encode_bmp``) then decoded back by walking
     the actual container structure — BITMAPFILEHEADER magic + pixel
     offset, BITMAPINFOHEADER dims/bpp/compression, 4-byte-aligned
-    bottom-up rows reassembled top-down — inside the same Arrow-batched
-    mapInPandas shape as the other kernels. ``codec="real"`` therefore
-    no longer raises for uncompressed images.
+    bottom-up rows reassembled top-down.
 
     Oracle-able because the pixels ARE the payload bytes plus
     deterministic zero padding to a full last row: width/height/bpp and
     the max/mean over all width*height pixels are SQL-expressible over
     the text's byte values.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "bpp",
-                                    "n_px", "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                blob = _encode_bmp(bytes(payload))
-                magic, _fsize, _r1, _r2, off = struct.unpack_from(
-                    "<2sIHHI", blob, 0)
-                if magic != b"BM":
-                    raise ValueError("not a BMP stream")
-                (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _ncol,
-                 _nimp) = struct.unpack_from("<IiiHHIIiiII", blob, 14)
-                if hsz != 40 or comp != 0 or bpp != 8:
-                    raise ValueError("unsupported DIB variant")
-                stride = (w * bpp // 8 + 3) & ~3
-                px = b"".join(
-                    blob[off + r * stride: off + r * stride + w]
-                    for r in reversed(range(h)))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bpp"].append(bpp)
-                rows["n_px"].append(len(px))
-                rows["max_px"].append(max(px) if px else 0)
-                rows["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        blob = _encode_bmp(payload)
+        magic, _fsize, _r1, _r2, off = struct.unpack_from("<2sIHHI", blob, 0)
+        if magic != b"BM":
+            raise ValueError("not a BMP stream")
+        (hsz, w, h, _planes, bpp, comp, _isz, _xp, _yp, _ncol,
+         _nimp) = struct.unpack_from("<IiiHHIIiiII", blob, 14)
+        if hsz != 40 or comp != 0 or bpp != 8:
+            raise ValueError("unsupported DIB variant")
+        stride = (w * bpp // 8 + 3) & ~3
+        px = b"".join(blob[off + r * stride: off + r * stride + w]
+                      for r in reversed(range(h)))
+        return [(w, h, bpp, len(px), *_px_stats(px))]
 
-    return media.mapInPandas(kernel, schema=BMP_SCHEMA)
+    return _codec_kernel(media, BMP_SCHEMA, rows)
 
 
 AVI_W, AVI_H = 8, 8            # frame dims: 64 pixels = 64 payload bytes
@@ -326,8 +321,7 @@ def png_decode_features(media: DataFrame) -> DataFrame:
     validation, IDAT concatenation + ``zlib.decompress``, then full
     scanline reconstruction for all five PNG filter types (the
     encoder cycles through them, so every branch executes on every
-    blob of 5+ rows). Same Arrow-batched mapInPandas shape as the
-    other codecs. (The lossy-transform tier is ``jpeg_decode_features``;
+    blob of 5+ rows). (The lossy-transform tier is ``jpeg_decode_features``;
     motion compensation is ``mcv_decode_frames``.)
 
     Oracle-able exactly like ``bmp_decode_features``: the
@@ -336,23 +330,11 @@ def png_decode_features(media: DataFrame) -> DataFrame:
     the text's byte values — the oracle proving, end to end, that
     compress -> CRC -> decompress -> unfilter is lossless.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "bit_depth",
-                                   "color_type", "n_px", "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                w, h, bd, ct, px = _decode_png(_encode_png(bytes(payload)))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(bd)
-                out["color_type"].append(ct)
-                out["n_px"].append(len(px))
-                out["max_px"].append(max(px) if px else 0)
-                out["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(out)
+    def rows(payload: bytes):
+        w, h, bd, ct, px = _decode_png(_encode_png(payload))
+        return [(w, h, bd, ct, len(px), *_px_stats(px))]
 
-    return media.mapInPandas(kernel, schema=PNG_SCHEMA)
+    return _codec_kernel(media, PNG_SCHEMA, rows)
 
 
 # --- DEFLATE: from-scratch RFC 1950/1951 inflate ---------------------------
@@ -381,68 +363,8 @@ _CLC_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2,
               14, 1, 15)
 
 
-def _huff_table(lengths: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman table per RFC 1951 §3.2.2: (code_len, code)
-    -> symbol, codes assigned in symbol order within each length.
-
-    Rejects OVER-subscribed length sets (Kraft sum > 1) at table
-    construction: without the check, two symbols can silently land on
-    the same (len, code) key and the corruption surfaces only at the
-    Adler-32 mismatch far downstream (r10 advice). Incomplete sets
-    (Kraft sum < 1) are accepted — RFC 1951 itself uses one (the fixed
-    distance table assigns 30 of 32 five-bit codes), and degenerate
-    one-code dynamic distance tables are legal."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    for ln in range(1, max(lengths, default=0) + 1):
-        for sym, sl in enumerate(lengths):
-            if sl == ln:
-                if code >= (1 << ln):
-                    raise ValueError(
-                        f"over-subscribed Huffman code lengths: "
-                        f"length {ln} overflows its {1 << ln}-code "
-                        f"space (corrupt DEFLATE header)")
-                table[(ln, code)] = sym
-                code += 1
-        code <<= 1
-    return table
-
-
-class _LsbBitReader:
-    """LSB-first bit reader over the DEFLATE stream; Huffman codes are
-    read bit-by-bit MSB-of-code-first per §3.1.1."""
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data, self.pos, self.buf, self.n = data, pos, 0, 0
-
-    def bits(self, k: int) -> int:
-        while self.n < k:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated DEFLATE stream")
-            self.buf |= self.data[self.pos] << self.n
-            self.pos += 1
-            self.n += 8
-        v = self.buf & ((1 << k) - 1)
-        self.buf >>= k
-        self.n -= k
-        return v
-
-    def symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code = ln = 0
-        while ln <= 15:
-            code = (code << 1) | self.bits(1)
-            ln += 1
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in DEFLATE stream")
-
-    def align(self) -> None:
-        self.buf = self.n = 0
-
-
-_FIXED_LIT = _huff_table([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
-_FIXED_DIST = _huff_table([5] * 30)
+_FIXED_LIT = canonical_table([8] * 144 + [9] * 112 + [7] * 24 + [8] * 8)
+_FIXED_DIST = canonical_table([5] * 30)
 
 
 def _adler32(data: bytes) -> int:
@@ -456,9 +378,17 @@ def _adler32(data: bytes) -> int:
     return (b << 16) | a
 
 
-_FIXED_LIT_ENC = {sym: (ln, code) for (ln, code), sym in _FIXED_LIT.items()}
-_FIXED_DIST_ENC = {sym: (ln, code) for (ln, code), sym in
-                   _FIXED_DIST.items()}
+def _lsb_codes(table: dict[tuple[int, int], int]
+               ) -> dict[int, tuple[int, int]]:
+    """Encode table with each code bit-reversed: DEFLATE packs Huffman
+    codes MSB-of-code first into its LSB-first stream (§3.1.1), so one
+    LSB-first ``put`` of the reversed code emits them in order."""
+    return {sym: (int(f"{code:0{ln}b}"[::-1], 2), ln)
+            for sym, (code, ln) in encode_table(table).items()}
+
+
+_FIXED_LIT_ENC = _lsb_codes(_FIXED_LIT)
+_FIXED_DIST_ENC = _lsb_codes(_FIXED_DIST)
 
 
 def _len_code(length: int) -> tuple[int, int, int]:
@@ -496,24 +426,9 @@ def _deflate_raw(data: bytes) -> bytes:
     wrapper (:func:`_deflate`) and the gzip member emitter
     (``operators.compression._gzip``), which differ only in header and
     checksum trailer (RFC 1950 Adler-32 vs RFC 1952 CRC-32 + ISIZE)."""
-    out = bytearray()
-    buf = nbits = 0
-
-    def put_bits(v: int, k: int) -> None:      # extra bits: LSB-first
-        nonlocal buf, nbits
-        buf |= v << nbits
-        nbits += k
-        while nbits >= 8:
-            out.append(buf & 0xFF)
-            buf >>= 8
-            nbits -= 8
-
-    def put_code(ln: int, code: int) -> None:  # Huffman: MSB-first
-        for b in range(ln - 1, -1, -1):
-            put_bits((code >> b) & 1, 1)
-
-    put_bits(1, 1)                             # BFINAL
-    put_bits(1, 2)                             # BTYPE fixed
+    w = LsbWriter()
+    w.put(1, 1)                                # BFINAL
+    w.put(1, 2)                                # BTYPE fixed
     heads: dict[bytes, list[int]] = {}
     i, n = 0, len(data)
     while i < n:
@@ -534,25 +449,23 @@ def _deflate_raw(data: bytes) -> bytes:
                         break
         if best_len >= 3:
             sym, eb, ev = _len_code(best_len)
-            put_code(*_FIXED_LIT_ENC[sym])
-            put_bits(ev, eb)
+            w.put(*_FIXED_LIT_ENC[sym])
+            w.put(ev, eb)
             dsym, deb, dev = _dist_code(best_dist)
-            put_code(*_FIXED_DIST_ENC[dsym])
-            put_bits(dev, deb)
+            w.put(*_FIXED_DIST_ENC[dsym])
+            w.put(dev, deb)
             end = i + best_len
             while i < end:
                 if i + 3 <= n:
                     heads.setdefault(data[i:i + 3], []).append(i)
                 i += 1
         else:
-            put_code(*_FIXED_LIT_ENC[data[i]])
+            w.put(*_FIXED_LIT_ENC[data[i]])
             if i + 3 <= n:
                 heads.setdefault(data[i:i + 3], []).append(i)
             i += 1
-    put_code(*_FIXED_LIT_ENC[256])             # end of block
-    if nbits:
-        out.append(buf & 0xFF)
-    return bytes(out)
+    w.put(*_FIXED_LIT_ENC[256])                # end of block
+    return w.flush()
 
 
 def _inflate(blob: bytes) -> bytes:
@@ -582,7 +495,7 @@ def _inflate_raw(blob: bytes, pos: int) -> tuple[bytes, int]:
     parser (``operators.compression._gunzip``), whose trailers differ
     (Adler-32 vs CRC-32 + ISIZE) but whose compressed body is the
     identical bitstream format."""
-    r = _LsbBitReader(blob, pos)
+    r = LsbReader(blob, pos, what="DEFLATE stream")
     out = bytearray()
     while True:
         final, btype = r.bits(1), r.bits(2)
@@ -608,10 +521,10 @@ def _inflate_raw(blob: bytes, pos: int) -> tuple[bytes, int]:
                 cl_lens = [0] * 19
                 for i in range(hclen):
                     cl_lens[_CLC_ORDER[i]] = r.bits(3)
-                cl_t = _huff_table(cl_lens)
+                cl_t = canonical_table(cl_lens)
                 lens: list[int] = []
                 while len(lens) < hlit + hdist:
-                    s = r.symbol(cl_t)
+                    s = read_symbol(r, cl_t, 15)
                     if s < 16:
                         lens.append(s)
                     elif s == 16:
@@ -624,10 +537,10 @@ def _inflate_raw(blob: bytes, pos: int) -> tuple[bytes, int]:
                         lens += [0] * (11 + r.bits(7))
                 if len(lens) != hlit + hdist:
                     raise ValueError("code-length run overflows header")
-                lit_t = _huff_table(lens[:hlit])
-                dist_t = _huff_table(lens[hlit:])
+                lit_t = canonical_table(lens[:hlit])
+                dist_t = canonical_table(lens[hlit:])
             while True:
-                sym = r.symbol(lit_t)
+                sym = read_symbol(r, lit_t, 15)
                 if sym < 256:
                     out.append(sym)
                 elif sym == 256:
@@ -635,7 +548,7 @@ def _inflate_raw(blob: bytes, pos: int) -> tuple[bytes, int]:
                 elif sym <= 285:
                     li = sym - 257
                     length = _LEN_BASE[li] + r.bits(_LEN_EXTRA[li])
-                    d = r.symbol(dist_t)
+                    d = read_symbol(r, dist_t, 15)
                     if d > 29:
                         raise ValueError(f"invalid distance code {d}")
                     dist = _DIST_BASE[d] + r.bits(_DIST_EXTRA[d])
@@ -741,25 +654,19 @@ def _lzw_encode(data: bytes, mcs: int = GIF_MIN_CODE_SIZE) -> bytes:
     code width mcs+1, width bump when the next-slot counter reaches
     the width's capacity, CLEAR + full reset at slot 4095."""
     clear, eoi = 1 << mcs, (1 << mcs) + 1
-    out = bytearray()
-    buf = nbits = 0
-    width, maxc = mcs + 1, 1 << (mcs + 1)
+    w = LsbWriter()
+    write = w.put
+    width = mcs + 1
     running = eoi + 1
     table: dict[tuple[int, int], int] = {}
 
     def put(code: int) -> None:
-        nonlocal buf, nbits, width, maxc
-        buf |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(buf & 0xFF)
-            buf >>= 8
-            nbits -= 8
+        nonlocal width
+        write(code, width)
         # width bump AFTER emitting, on the pre-insert slot counter —
         # the discipline the decoder mirrors after each read
-        if running >= maxc and width < 12:
+        if running >= 1 << width and width < 12:
             width += 1
-            maxc = 1 << width
 
     put(clear)
     prefix: int | None = None
@@ -776,7 +683,7 @@ def _lzw_encode(data: bytes, mcs: int = GIF_MIN_CODE_SIZE) -> bytes:
             put(clear)
             table.clear()
             running = eoi + 1
-            width, maxc = mcs + 1, 1 << (mcs + 1)
+            width = mcs + 1
         else:
             table[key] = running
             running += 1
@@ -784,9 +691,7 @@ def _lzw_encode(data: bytes, mcs: int = GIF_MIN_CODE_SIZE) -> bytes:
     if prefix is not None:
         put(prefix)
     put(eoi)
-    if nbits:
-        out.append(buf & 0xFF)
-    return bytes(out)
+    return w.flush()
 
 
 def _lzw_decode(data: bytes, mcs: int = GIF_MIN_CODE_SIZE) -> bytes:
@@ -800,40 +705,30 @@ def _lzw_decode(data: bytes, mcs: int = GIF_MIN_CODE_SIZE) -> bytes:
     table = dict(base)
     next_entry = eoi + 1
     running = eoi + 1
-    width, maxc = mcs + 1, 1 << (mcs + 1)
-    pos = buf = nbits = 0
+    width = mcs + 1
+    read = LsbReader(data, what="LZW stream (no EOI)").bits
     out = bytearray()
     prev: bytes | None = None
     while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated LZW stream (no EOI)")
-            buf |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = buf & (maxc - 1)
-        buf >>= width
-        nbits -= width
+        code = read(width)
         running += 1
-        if running > maxc and width < 12:
+        if running > 1 << width and width < 12:
             width += 1
-            maxc = 1 << width
         if code == clear:
             table = dict(base)
             next_entry = eoi + 1
             running = eoi + 1
-            width, maxc = mcs + 1, 1 << (mcs + 1)
+            width = mcs + 1
             prev = None
             continue
         if code == eoi:
             return bytes(out)
-        if code in table:
-            s = table[code]
-        elif code == next_entry and prev is not None:
+        s = table.get(code)
+        if s is None:
+            if code != next_entry or prev is None:
+                raise ValueError(f"corrupt LZW stream: code {code} beyond "
+                                 f"table slot {next_entry}")
             s = prev + prev[:1]          # the KwKwK case
-        else:
-            raise ValueError(f"corrupt LZW stream: code {code} beyond "
-                             f"table slot {next_entry}")
         out += s
         if prev is not None:
             table[next_entry] = prev + s[:1]
@@ -940,43 +835,29 @@ def gif_decode_features(media: DataFrame) -> DataFrame:
     Each payload is containerized as a 256-gray GIF (``_encode_gif``)
     and decoded back the real way — signature, descriptor walk,
     sub-block reassembly, LZW decompression with width progression,
-    clear-code resets and the KwKwK case, palette mapping. Same
-    Arrow-batched mapInPandas shape as the other codecs; the
+    clear-code resets and the KwKwK case, palette mapping. The
     reconstructed pixels are the payload bytes plus zero padding, so
     the oracle over the text's byte values proves the whole
     LZW-compress -> sub-block -> decompress path is lossless.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_colors",
-                                   "n_px", "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                w, h, nc, px = _decode_gif(_encode_gif(bytes(payload)))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_colors"].append(nc)
-                out["n_px"].append(len(px))
-                out["max_px"].append(max(px) if px else 0)
-                out["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(out)
+    def rows(payload: bytes):
+        w, h, nc, px = _decode_gif(_encode_gif(payload))
+        return [(w, h, nc, len(px), *_px_stats(px))]
 
-    return media.mapInPandas(kernel, schema=GIF_SCHEMA)
+    return _codec_kernel(media, GIF_SCHEMA, rows)
 
 
 AVI_SCHEMA = ("doc_id bigint, frame_idx int, n_frames int, width int, "
               "height int, us_per_frame int, max_px int, mean_px double")
 
 
-def _encode_avi(payload: bytes) -> bytes:
-    """Containerize payload bytes as a minimal uncompressed 8-bit AVI:
-    RIFF('AVI ') > LIST(hdrl){avih, LIST(strl){strh, strf}} >
-    LIST(movi){'00db' frame chunks}. Each frame is AVI_W*AVI_H raw
-    pixels (one payload byte per pixel, last frame zero-padded)."""
-    fs = AVI_W * AVI_H
-    n_frames = max(1, (len(payload) + fs - 1) // fs) if payload else 0
-    frames = [payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00")
-              for i in range(n_frames)]
+def _avi(frames: list[bytes], w: int, h: int, handler: bytes,
+         chunk_id: bytes, compression: int = 0) -> bytes:
+    """Minimal 8-bit video AVI: RIFF('AVI ') > LIST(hdrl){avih,
+    LIST(strl){strh, strf}} > LIST(movi){``chunk_id`` frame chunks},
+    every chunk even-padded. ``handler``/``compression`` are the stream
+    fourcc and biCompression ('DIB '/0 raw, 'MJPG' for Motion-JPEG)."""
+    fs, n_frames = w * h, len(frames)
 
     def chunk(fourcc: bytes, body: bytes) -> bytes:
         pad = b"\x00" if len(body) % 2 else b""
@@ -986,17 +867,61 @@ def _encode_avi(payload: bytes) -> bytes:
         return chunk(b"LIST", fourcc + body)
 
     avih = struct.pack("<14I", AVI_FPS_US, fs * 25, 0, 0, n_frames, 0, 1,
-                       fs, AVI_W, AVI_H, 0, 0, 0, 0)
-    strh = (b"vids" + b"DIB " + struct.pack("<I", 0)
+                       fs, w, h, 0, 0, 0, 0)
+    strh = (b"vids" + handler + struct.pack("<I", 0)
             + struct.pack("<2H10I", 0, 0, 0, 1, 25, 0, n_frames, fs, 0, 0,
                           fs, 0))
-    strf = struct.pack("<IiiHHIIiiII", 40, AVI_W, AVI_H, 1, 8, 0, fs,
+    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, compression, fs,
                        0, 0, 256, 0)
     hdrl = lst(b"hdrl", chunk(b"avih", avih)
                + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in frames))
+    movi = lst(b"movi", b"".join(chunk(chunk_id, f) for f in frames))
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _avi_frames(blob: bytes, chunk_id: bytes
+                ) -> tuple[tuple[int, ...], list[bytes]]:
+    """Walk a RIFF/AVI chunk tree: descend LIST(hdrl)/LIST(movi), skip
+    other lists (e.g. strl), honor even-byte padding. Returns the 14
+    avih fields and the ``chunk_id`` frame bodies, whose count must
+    match avih's frame count."""
+    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
+        raise ValueError("not a RIFF/AVI stream")
+    pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
+    avih = None
+    frames = []
+    while pos + 8 <= end:
+        fourcc = blob[pos:pos + 4]
+        size = struct.unpack_from("<I", blob, pos + 4)[0]
+        body_at = pos + 8
+        if fourcc == b"LIST" and blob[body_at:body_at + 4] in (b"hdrl",
+                                                                b"movi"):
+            pos = body_at + 4                  # descend into this list
+            continue
+        if fourcc == b"avih":
+            avih = struct.unpack_from("<14I", blob, body_at)
+        elif fourcc == chunk_id:
+            frames.append(blob[body_at:body_at + size])
+        pos = body_at + size + (size % 2)
+    if avih is None or len(frames) != avih[4]:
+        raise ValueError("AVI header/frame-count mismatch")
+    return avih, frames
+
+
+def _frames_of(payload: bytes, fs: int) -> list[bytes]:
+    """The payload as fs-byte frames, the last one zero-padded; none
+    for an empty payload."""
+    return [payload[i:i + fs].ljust(fs, b"\x00")
+            for i in range(0, len(payload), fs)]
+
+
+def _encode_avi(payload: bytes) -> bytes:
+    """Containerize payload bytes as an uncompressed 8-bit AVI whose
+    '00db' frames are AVI_W*AVI_H raw pixels (one payload byte per
+    pixel, last frame zero-padded)."""
+    return _avi(_frames_of(payload, AVI_W * AVI_H), AVI_W, AVI_H,
+                b"DIB ", b"00db")
 
 
 def avi_decode_frames(media: DataFrame,
@@ -1008,59 +933,20 @@ def avi_decode_frames(media: DataFrame,
     (``_encode_avi``) and decoded back by walking the actual RIFF
     chunk tree — RIFF magic + 'AVI ' form type, LIST(hdrl) > avih for
     frame count/dims/rate, LIST(movi) > '00db' chunks (even-byte
-    padding honored) for the frames — inside the same Arrow-batched
-    mapInPandas shape as the other kernels, emitting one row per
-    every_n-th frame (1 row in -> N rows out).
+    padding honored) for the frames — emitting one row per every_n-th
+    frame (1 row in -> N rows out).
 
     Oracle-able because each frame's pixels are a fixed 64-byte slice
     of the payload (last frame zero-padded): per-frame max/mean are
     exact byte math over that slice.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "us_per_frame",
-                                    "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                blob = _encode_avi(bytes(payload))
-                if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI stream")
-                pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
-                n_frames = w = h = uspf = None
-                frames = []
-                while pos + 8 <= end:
-                    fourcc = blob[pos:pos + 4]
-                    size = struct.unpack_from("<I", blob, pos + 4)[0]
-                    body_at = pos + 8
-                    if fourcc == b"LIST":
-                        kind = blob[body_at:body_at + 4]
-                        if kind in (b"hdrl", b"movi"):
-                            pos = body_at + 4  # descend into this list
-                            continue
-                        pos = body_at + size + (size % 2)  # skip (e.g. strl)
-                        continue
-                    if fourcc == b"avih":
-                        fields = struct.unpack_from("<14I", blob, body_at)
-                        uspf, n_frames = fields[0], fields[4]
-                        w, h = fields[8], fields[9]
-                    elif fourcc == b"00db":
-                        frames.append(blob[body_at:body_at + size])
-                    pos = body_at + size + (size % 2)
-                if n_frames is None or len(frames) != n_frames:
-                    raise ValueError("AVI header/frame-count mismatch")
-                for i in range(0, n_frames, every_n):
-                    px = frames[i]
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(n_frames)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["us_per_frame"].append(uspf)
-                    rows["max_px"].append(max(px) if px else 0)
-                    rows["mean_px"].append(sum(px) / len(px) if px else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        avih, frames = _avi_frames(_encode_avi(payload), b"00db")
+        return [(i, len(frames), avih[8], avih[9], avih[0],
+                 *_px_stats(frames[i]))
+                for i in range(0, len(frames), every_n)]
 
-    return media.mapInPandas(kernel, schema=AVI_SCHEMA)
+    return _codec_kernel(media, AVI_SCHEMA, rows)
 
 
 RESIZED_SCHEMA = "doc_id bigint, media_type string, media binary, n_bytes bigint"
@@ -1074,24 +960,13 @@ def resize_media(media: DataFrame, target_bytes: int = 256,
     codec takes a deterministic byte stride so output size and schema
     behave like a real resizer (bounded by target_bytes).
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real resize requires media libraries not bundled here; "
-                    "use codec='fake' for the pipeline-shape path")
-            out = []
-            for b in pdf["media"]:
-                stride = max(1, len(b) // target_bytes)
-                out.append(bytes(b[::stride][:target_bytes]))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "media_type": "resized/" + pdf["media_type"],
-                "media": out,
-                "n_bytes": [len(b) for b in out],
-            })
+    _real_unsupported(codec, "resize")
 
-    return media.mapInPandas(kernel, schema=RESIZED_SCHEMA)
+    def rows(b: bytes, media_type: str):
+        out = b[::max(1, len(b) // target_bytes)][:target_bytes]
+        return [("resized/" + media_type, out, len(out))]
+
+    return _codec_kernel(media, RESIZED_SCHEMA, rows, extra=("media_type",))
 
 
 FRAME_SCHEMA = ("doc_id bigint, frame_idx int, frame binary, "
@@ -1108,24 +983,14 @@ def sample_frames(media: DataFrame, frame_bytes: int = 1024,
     own row — the fan-out shape (and the reason this is mapInPandas, not
     a scalar UDF). A real codec would seek keyframes instead.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if codec == "real":
-                raise NotImplementedError(
-                    "real frame extraction requires a video codec; "
-                    "use codec='fake' for the pipeline-shape path")
-            ids, idxs, frames, totals = [], [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["media"]):
-                n = max(1, (len(b) + frame_bytes - 1) // frame_bytes)
-                for i in range(0, n, every_n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(bytes(b[i * frame_bytes:(i + 1) * frame_bytes]))
-                    totals.append(n)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "frame": frames, "n_frames": totals})
+    _real_unsupported(codec, "frame extraction")
 
-    return media.mapInPandas(kernel, schema=FRAME_SCHEMA)
+    def rows(b: bytes):
+        n = max(1, (len(b) + frame_bytes - 1) // frame_bytes)
+        return [(i, b[i * frame_bytes:(i + 1) * frame_bytes], n)
+                for i in range(0, n, every_n)]
+
+    return _codec_kernel(media, FRAME_SCHEMA, rows)
 
 
 # --- JPEG: real lossy transform codec, pure stdlib + numpy ----------------
@@ -1185,17 +1050,37 @@ _AC_VALS = (
     0xF9, 0xFA)
 
 
-def _huff_codes(bits, vals):
-    """Canonical Huffman codes from a (BITS, HUFFVAL) pair
-    (ISO/IEC 10918-1 Annex C): symbol -> (code, length)."""
-    out, code, i = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[i]] = (code, length)
-            code += 1
-            i += 1
-        code <<= 1
-    return out
+@functools.lru_cache(maxsize=16)
+def _jpeg_table(bits: bytes, vals: bytes) -> dict[tuple[int, int], int]:
+    """Decode table from a (BITS, HUFFVAL) pair (ISO/IEC 10918-1
+    Annex C): BITS expands to per-HUFFVAL-index code lengths, already in
+    canonical order, so the shared assignment reproduces Annex C's
+    codes for any HUFFVAL order. Cached because every frame of an MJPEG
+    stream carries the same DHT segment; callers only read the table."""
+    lengths = [ln for ln, count in enumerate(bits, 1) for _ in range(count)]
+    return {key: vals[i] for key, i in canonical_table(lengths).items()}
+
+
+_DC_CODES = encode_table(_jpeg_table(_DC_BITS, _DC_VALS))
+_AC_CODES = encode_table(_jpeg_table(_AC_BITS, _AC_VALS))
+
+
+def _jpeg_stuff(scan: bytes) -> bytes:
+    """0xFF byte stuffing: a literal 0xFF in entropy-coded data is
+    followed by 0x00 so it cannot read as a marker."""
+    return scan.replace(b"\xff", b"\xff\x00")
+
+
+def _jpeg_unstuff(seg: bytes) -> bytes:
+    """Inverse of :func:`_jpeg_stuff` over the bytes after SOS: the
+    entropy-coded segment ends at EOI (or the end of ``seg``); any other
+    marker before that is an error."""
+    end = seg.find(b"\xff")
+    while end >= 0 and seg[end + 1:end + 2] == b"\x00":
+        end = seg.find(b"\xff", end + 2)
+    if end >= 0 and seg[end + 1:end + 2] not in (b"\xd9", b""):
+        raise ValueError("unexpected marker inside scan data")
+    return (seg if end < 0 else seg[:end]).replace(b"\xff\x00", b"\xff")
 
 
 def _dct_matrix():
@@ -1206,31 +1091,6 @@ def _dct_matrix():
     t = np.cos((2 * i[None, :] + 1) * i[:, None] * np.pi / 16) / 2.0
     t[0, :] = 1.0 / (2.0 * np.sqrt(2.0))
     return t
-
-
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.buf.append(byte)
-            if byte == 0xFF:
-                self.buf.append(0x00)   # stuffing: literal FF in scan data
-        self.acc &= (1 << self.nbits) - 1
-
-    def done(self) -> bytes:
-        if self.nbits:
-            self.put(0xFF, 8 - self.nbits)  # 1-pad the final byte
-        return bytes(self.buf)
 
 
 def _jpeg_dims(n: int) -> tuple[int, int]:
@@ -1263,13 +1123,10 @@ def _encode_jpeg(payload: bytes) -> bytes:
             f"payload of {len(payload)} bytes needs {h} lines of "
             f"{w}px, over the JPEG SOF0 uint16 limit (65535)")
     nb = (w // 8) * (h // 8)
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALS)
-
     quant = np.full(64, JPEG_Q_AC, dtype=np.int32)
     quant[0] = JPEG_Q_DC
 
-    writer = _BitWriter()
+    writer = MsbWriter()
     if nb:
         px = np.frombuffer(payload.ljust(h * w, b"\x00"), dtype=np.uint8)
         blocks = (px.reshape(h // 8, 8, w // 8, 8)
@@ -1287,7 +1144,7 @@ def _encode_jpeg(payload: bytes) -> bytes:
             diff = int(row[0]) - prev_dc
             prev_dc = int(row[0])
             size = diff.bit_length() if diff else 0
-            code, ln = dc_codes[size]
+            code, ln = _DC_CODES[size]
             writer.put(code, ln)
             if size:
                 writer.put(diff if diff > 0 else diff + (1 << size) - 1, size)
@@ -1300,16 +1157,16 @@ def _encode_jpeg(payload: bytes) -> bytes:
                     run += 1
                     continue
                 while run >= 16:
-                    code, ln = ac_codes[0xF0]      # ZRL: 16 zeros
+                    code, ln = _AC_CODES[0xF0]     # ZRL: 16 zeros
                     writer.put(code, ln)
                     run -= 16
                 size = v.bit_length() if v > 0 else (-v).bit_length()
-                code, ln = ac_codes[(run << 4) | size]
+                code, ln = _AC_CODES[(run << 4) | size]
                 writer.put(code, ln)
                 writer.put(v if v > 0 else v + (1 << size) - 1, size)
                 run = 0
             if last_nz < 63:
-                code, ln = ac_codes[0x00]          # EOB
+                code, ln = _AC_CODES[0x00]         # EOB
                 writer.put(code, ln)
 
     def seg(marker: int, body: bytes) -> bytes:
@@ -1322,50 +1179,7 @@ def _encode_jpeg(payload: bytes) -> bytes:
     sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
     app0 = seg(0xFFE0, b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0]))
     return (b"\xFF\xD8" + app0 + dqt + sof + dht + sos
-            + writer.done() + b"\xFF\xD9")
-
-
-class _BitReader:
-    """MSB-first bit reader over JPEG scan data with 0xFF00 unstuffing."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def bit(self) -> int:
-        if not self.nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG scan data")
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                nxt = self.data[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1          # stuffed literal FF
-                else:
-                    raise ValueError("unexpected marker inside scan data")
-            self.acc, self.nbits = byte, 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _huff_decode(reader: _BitReader, table: dict) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | reader.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in scan data")
+            + _jpeg_stuff(writer.flush(fill=1)) + b"\xFF\xD9")
 
 
 def _extend(v: int, size: int) -> int:
@@ -1420,16 +1234,7 @@ def _decode_jpeg(blob: bytes):
                 cls, tid = body[at] >> 4, body[at] & 0x0F
                 bits = body[at + 1:at + 17]
                 nvals = sum(bits)
-                vals = body[at + 17:at + 17 + nvals]
-                tab = {}
-                code = 0
-                vi = 0
-                for length in range(1, 17):
-                    for _ in range(bits[length - 1]):
-                        tab[(length, code)] = vals[vi]
-                        code += 1
-                        vi += 1
-                    code <<= 1
+                tab = _jpeg_table(bits, body[at + 17:at + 17 + nvals])
                 if tid != 0:
                     raise ValueError("only table id 0 supported")
                 if cls == 0:
@@ -1446,16 +1251,17 @@ def _decode_jpeg(blob: bytes):
     nb = (w // 8) * (h // 8)
     if nb == 0:
         return w, h, np.zeros((h, w), dtype=np.uint8)
-    reader = _BitReader(blob, scan_at)
+    reader = MsbReader(_jpeg_unstuff(blob[scan_at:]),
+                       what="JPEG scan data")
     zz = np.zeros((nb, 64), dtype=np.float64)
     prev_dc = 0
     for b in range(nb):
-        size = _huff_decode(reader, dc_tab)
+        size = read_symbol(reader, dc_tab, 16)
         prev_dc += _extend(reader.bits(size), size) if size else 0
         zz[b, 0] = prev_dc
         k = 1
         while k < 64:
-            sym = _huff_decode(reader, ac_tab)
+            sym = read_symbol(reader, ac_tab, 16)
             if sym == 0x00:            # EOB
                 break
             if sym == 0xF0:            # ZRL
@@ -1479,6 +1285,18 @@ def _decode_jpeg(blob: bytes):
     return w, h, out
 
 
+def _jpeg_err_ok(px, chunk: bytes) -> bool:
+    """The provable reconstruction bound: decoded (h, w) pixels ``px``
+    within JPEG_ERR_BOUND of ``chunk``, the payload slice they encode
+    (zero-padded to the frame)."""
+    import numpy as np
+    h, w = px.shape
+    orig = np.frombuffer(chunk.ljust(h * w, b"\x00"),
+                         dtype=np.uint8).reshape(h, w)
+    err = np.max(np.abs(px.astype(np.int32) - orig.astype(np.int32)))
+    return bool(err <= JPEG_ERR_BOUND)
+
+
 def jpeg_decode_features(media: DataFrame) -> DataFrame:
     """REAL LOSSY image decode, pure stdlib + numpy: baseline JPEG.
 
@@ -1489,8 +1307,7 @@ def jpeg_decode_features(media: DataFrame) -> DataFrame:
     RLE, Annex-K standard-table Huffman coding, 0xFF stuffing) and
     decoded back the real way (``_decode_jpeg``: marker walk, Huffman
     tables rebuilt from the stream's own DHT segments, entropy decode,
-    dequantize, de-zigzag, inverse DCT).  Same Arrow-batched
-    mapInPandas shape as the other codecs.  (Motion compensation,
+    dequantize, de-zigzag, inverse DCT).  (Motion compensation,
     sub-pixel search, RD mode decisions, arithmetic coding and
     psychoacoustic allocation are covered by the MCV1/2/3 and PAC1
     codecs; the named standards' bit-exact bitstream syntaxes remain
@@ -1510,28 +1327,11 @@ def jpeg_decode_features(media: DataFrame) -> DataFrame:
     pin the empirical error far below the bound and the exact
     roundtrip of constant blocks.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_px",
-                                   "n_blocks", "err_le_16")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, px = _decode_jpeg(_encode_jpeg(payload))
-                orig = np.frombuffer(payload.ljust(h * w, b"\x00"),
-                                     dtype=np.uint8).reshape(h, w) \
-                    if h else np.zeros((0, w), dtype=np.uint8)
-                err = int(np.max(np.abs(px.astype(np.int32)
-                                        - orig.astype(np.int32)))) if h else 0
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(w * h)
-                out["n_blocks"].append((w // 8) * (h // 8))
-                out["err_le_16"].append(err <= JPEG_ERR_BOUND)
-            yield pd.DataFrame(out)
+    def rows(payload: bytes):
+        w, h, px = _decode_jpeg(_encode_jpeg(payload))
+        return [(w, h, w * h, (w // 8) * (h // 8), _jpeg_err_ok(px, payload))]
 
-    return media.mapInPandas(kernel, schema=JPEG_SCHEMA)
+    return _codec_kernel(media, JPEG_SCHEMA, rows)
 
 
 # --- MJPEG/AVI: compressed video = JPEG frames in the RIFF container ------
@@ -1544,36 +1344,13 @@ MJPEG_SCHEMA = ("doc_id bigint, frame_idx int, n_frames int, width int, "
 
 def _encode_mjpeg_avi(payload: bytes) -> bytes:
     """Containerize payload bytes as a REAL COMPRESSED video: an AVI
-    whose frames are baseline JPEGs (Motion-JPEG).  Same RIFF tree as
-    ``_encode_avi`` but the stream is fourcc 'MJPG' and each frame
-    chunk is '00dc' (compressed) holding a full ``_encode_jpeg``
-    bitstream — so frame chunks have *varying* sizes, like any real
-    compressed container."""
-    fs = MJPEG_W * MJPEG_H
-    n_frames = max(1, (len(payload) + fs - 1) // fs) if payload else 0
-    jpegs = [_encode_jpeg(payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"))
-             for i in range(n_frames)]
-
-    def chunk(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return fourcc + struct.pack("<I", len(body)) + body + pad
-
-    def lst(fourcc: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", fourcc + body)
-
-    avih = struct.pack("<14I", AVI_FPS_US, fs * 25, 0, 0, n_frames, 0, 1,
-                       fs, MJPEG_W, MJPEG_H, 0, 0, 0, 0)
-    strh = (b"vids" + b"MJPG" + struct.pack("<I", 0)
-            + struct.pack("<2H10I", 0, 0, 0, 1, 25, 0, n_frames, fs, 0, 0,
-                          fs, 0))
-    strf = struct.pack("<IiiHHIIiiII", 40, MJPEG_W, MJPEG_H, 1, 8,
-                       0x47504A4D,  # biCompression = 'MJPG' (LE fourcc)
-                       fs, 0, 0, 256, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", j) for j in jpegs))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    whose frames are baseline JPEGs (Motion-JPEG) — stream fourcc
+    'MJPG', and each '00dc' (compressed) chunk holds a full
+    ``_encode_jpeg`` bitstream, so frame chunks have *varying* sizes,
+    like any real compressed container."""
+    jpegs = [_encode_jpeg(f) for f in _frames_of(payload, MJPEG_W * MJPEG_H)]
+    return _avi(jpegs, MJPEG_W, MJPEG_H, b"MJPG", b"00dc",
+                compression=0x47504A4D)    # biCompression 'MJPG' (LE)
 
 
 def mjpeg_decode_frames(media: DataFrame,
@@ -1594,54 +1371,18 @@ def mjpeg_decode_frames(media: DataFrame,
     the same provable <=16 reconstruction-error flag as
     ``jpeg_decode_features``, checked against the original payload
     slice."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "err_le_16")}
-            fs = MJPEG_W * MJPEG_H
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                blob = _encode_mjpeg_avi(payload)
-                if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI stream")
-                pos, end = 12, 8 + struct.unpack_from("<I", blob, 4)[0]
-                n_frames = None
-                frames = []
-                while pos + 8 <= end:
-                    fourcc = blob[pos:pos + 4]
-                    size = struct.unpack_from("<I", blob, pos + 4)[0]
-                    body_at = pos + 8
-                    if fourcc == b"LIST":
-                        kind = blob[body_at:body_at + 4]
-                        if kind in (b"hdrl", b"movi"):
-                            pos = body_at + 4
-                            continue
-                        pos = body_at + size + (size % 2)
-                        continue
-                    if fourcc == b"avih":
-                        n_frames = struct.unpack_from("<14I", blob, body_at)[4]
-                    elif fourcc == b"00dc":
-                        frames.append(blob[body_at:body_at + size])
-                    pos = body_at + size + (size % 2)
-                if n_frames is None or len(frames) != n_frames:
-                    raise ValueError("AVI header/frame-count mismatch")
-                for i in range(0, n_frames, every_n):
-                    w, h, px = _decode_jpeg(frames[i])
-                    orig = np.frombuffer(
-                        payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
-                        dtype=np.uint8).reshape(h, w)
-                    err = int(np.max(np.abs(px.astype(np.int32)
-                                            - orig.astype(np.int32))))
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(n_frames)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["err_le_16"].append(err <= JPEG_ERR_BOUND)
-            yield pd.DataFrame(rows)
+    fs = MJPEG_W * MJPEG_H
 
-    return media.mapInPandas(kernel, schema=MJPEG_SCHEMA)
+    def rows(payload: bytes):
+        _avih, frames = _avi_frames(_encode_mjpeg_avi(payload), b"00dc")
+        out = []
+        for i in range(0, len(frames), every_n):
+            w, h, px = _decode_jpeg(frames[i])
+            out.append((i, len(frames), w, h,
+                        _jpeg_err_ok(px, payload[i * fs:(i + 1) * fs])))
+        return out
+
+    return _codec_kernel(media, MJPEG_SCHEMA, rows)
 
 
 # --- FLAC subset: real compressed LOSSLESS audio, pure stdlib -------------
@@ -1650,55 +1391,6 @@ FLAC_RATE = 8000
 FLAC_BLOCK = 256               # samples per frame (last frame ragged)
 FLAC_SCHEMA = ("doc_id bigint, n_samples bigint, sample_rate int, "
                "n_frames int, max_amp int, mean_amp double")
-
-
-class _Bits:
-    """Plain MSB-first bit writer/reader (no JPEG stuffing)."""
-
-    def __init__(self, data: bytes = b""):
-        self.data = bytearray(data)
-        self.acc = 0
-        self.nbits = 0
-        self.rpos = 0          # read cursor in bits
-
-    def put(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.data.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def unary(self, q: int) -> None:
-        while q >= 32:
-            self.put(0, 32)
-            q -= 32
-        self.put(1, q + 1)     # q zero bits then a one
-
-    def align(self) -> None:
-        if self.nbits:
-            self.put(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert not self.nbits
-        return bytes(self.data)
-
-    def read(self, length: int) -> int:
-        v = 0
-        for _ in range(length):
-            byte = self.data[self.rpos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.rpos & 7))) & 1)
-            self.rpos += 1
-        return v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def read_align(self) -> None:
-        self.rpos = (self.rpos + 7) & ~7
 
 
 def _crc8(data: bytes) -> int:
@@ -1750,9 +1442,9 @@ def _flac_utf8(n: int) -> bytes:
     raise ValueError(f"frame number {n} exceeds 36-bit UTF-8 coding")
 
 
-def _flac_read_utf8(bits: "_Bits") -> int:
+def _flac_read_utf8(bits: MsbReader) -> int:
     """Inverse of :func:`_flac_utf8` over a bit reader."""
-    b0 = bits.read(8)
+    b0 = bits.bits(8)
     if b0 < 0x80:
         return b0
     ones, mask = 0, 0x80
@@ -1763,7 +1455,7 @@ def _flac_read_utf8(bits: "_Bits") -> int:
         raise ValueError(f"bad UTF-8-coded frame number lead byte {b0:#x}")
     val = b0 & (0x7F >> ones)
     for _ in range(ones - 1):
-        b = bits.read(8)
+        b = bits.bits(8)
         if (b & 0xC0) != 0x80:
             raise ValueError(f"bad UTF-8 continuation byte {b:#x}")
         val = (val << 6) | (b & 0x3F)
@@ -1784,7 +1476,7 @@ def _encode_flac(payload: bytes) -> bytes:
 
     out = bytearray(b"fLaC")
     raw = bytes((s + 128) & 0xFF for s in samples)
-    info = _Bits()
+    info = MsbWriter()
     info.put(FLAC_BLOCK, 16)                  # min blocksize
     info.put(FLAC_BLOCK, 16)                  # max blocksize
     info.put(0, 24)                           # min framesize unknown
@@ -1793,7 +1485,7 @@ def _encode_flac(payload: bytes) -> bytes:
     info.put(0, 3)                            # channels - 1
     info.put(7, 5)                            # bits per sample - 1 (8)
     info.put(n, 36)
-    body = info.bytes() + hashlib.md5(raw).digest()
+    body = info.flush() + hashlib.md5(raw).digest()
     out += bytes([0x80]) + len(body).to_bytes(3, "big") + body  # last block
 
     for fi, block in enumerate(frames):
@@ -1807,10 +1499,8 @@ def _encode_flac(payload: bytes) -> bytes:
             if best_cost is None or cost < best_cost:
                 best_order, best_cost = order, cost
         res = _fixed_residuals(block, best_order)
-        mean = (sum(abs(r) for r in res) // max(1, len(res))) if res else 0
-        rice = max(0, min(14, mean.bit_length()))
 
-        hdr = _Bits()
+        hdr = MsbWriter()
         hdr.put(0b11111111111110, 14)
         hdr.put(0, 1)                          # reserved
         hdr.put(0, 1)                          # fixed blocksize stream
@@ -1822,10 +1512,8 @@ def _encode_flac(payload: bytes) -> bytes:
         for byte in _flac_utf8(fi):            # UTF-8-coded frame number
             hdr.put(byte, 8)
         hdr.put(len(block) - 1, 16)
-        hbytes = bytearray(hdr.bytes())
-        hbytes.append(_crc8(bytes(hbytes)))
-
-        sub = _Bits(bytes(hbytes))
+        hbytes = hdr.flush()
+        sub = MsbWriter(hbytes + bytes([_crc8(hbytes)]))
         sub.put(0, 1)                          # subframe: zero padding
         sub.put(0b001000 | best_order, 6)      # fixed predictor, order
         sub.put(0, 1)                          # no wasted bits
@@ -1833,16 +1521,9 @@ def _encode_flac(payload: bytes) -> bytes:
             sub.put(s & 0xFF, 8)
         sub.put(0, 2)                          # residual: 4-bit rice
         sub.put(0, 4)                          # partition order 0
-        sub.put(rice, 4)
-        for r in res:                          # zigzag then rice
-            z = (r << 1) if r >= 0 else ((-r) << 1) - 1
-            sub.unary(z >> rice)
-            if rice:
-                sub.put(z & ((1 << rice) - 1), rice)
-        sub.align()
-        fbytes = bytearray(sub.bytes())
-        fbytes += _crc16(bytes(fbytes)).to_bytes(2, "big")
-        out += fbytes
+        rice_put(sub, res)
+        fbytes = sub.flush()
+        out += fbytes + _crc16(fbytes).to_bytes(2, "big")
     return bytes(out)
 
 
@@ -1863,12 +1544,12 @@ def _decode_flac(blob: bytes) -> tuple[int, int, bytes]:
         ln = int.from_bytes(blob[pos + 1:pos + 4], "big")
         body = blob[pos + 4:pos + 4 + ln]
         if btype == 0:
-            bits = _Bits(body)
-            bits.read(16), bits.read(16), bits.read(24), bits.read(24)
-            rate = bits.read(20)
-            bits.read(3)
-            bps = bits.read(5) + 1
-            total = bits.read(36)
+            bits = MsbReader(body, what="FLAC STREAMINFO")
+            bits.bits(16 + 16 + 24 + 24)
+            rate = bits.bits(20)
+            bits.bits(3)
+            bps = bits.bits(5) + 1
+            total = bits.bits(36)
             if bps != 8:
                 raise ValueError("only 8-bit subset supported")
             md5_want = body[18:34]
@@ -1878,55 +1559,46 @@ def _decode_flac(blob: bytes) -> tuple[int, int, bytes]:
     samples: list[int] = []
     n_frames = 0
     while pos < len(blob) and len(samples) < (total or 0):
-        bits = _Bits(blob[pos:])
-        if bits.read(14) != 0b11111111111110:
+        bits = MsbReader(blob, pos, what="FLAC frame")
+        if bits.bits(14) != 0b11111111111110:
             raise ValueError("lost frame sync")
-        bits.read(2)
-        bs_code = bits.read(4)
+        bits.bits(2)
+        bs_code = bits.bits(4)
         if bs_code != 0b0111:
             raise ValueError("unexpected blocksize code")
-        bits.read(4), bits.read(4)
-        if bits.read(3) != 0b001:
+        bits.bits(8)                            # sample-rate, channel codes
+        if bits.bits(3) != 0b001:
             raise ValueError("expected 8-bit frame")
-        bits.read(1)
+        bits.bits(1)
         fnum = _flac_read_utf8(bits)            # UTF-8-coded frame number
         if fnum != n_frames:
             raise ValueError(f"frame number {fnum} != expected {n_frames}")
-        bsize = bits.read(16) + 1
-        hdr_len = bits.rpos // 8
-        if _crc8(blob[pos:pos + hdr_len]) != bits.read(8):
+        bsize = bits.bits(16) + 1
+        if _crc8(blob[pos:bits.pos]) != bits.bits(8):  # header is aligned
             raise ValueError("frame header CRC-8 mismatch")
-        bits.read_align()
-        if bits.read(1) != 0:
+        if bits.bits(1) != 0:
             raise ValueError("bad subframe padding bit")
-        stype = bits.read(6)
+        stype = bits.bits(6)
         if stype >> 3 != 0b001:
             raise ValueError("only fixed-predictor subframes supported")
         order = stype & 0x07
-        if bits.read(1) != 0:
+        if bits.bits(1) != 0:
             raise ValueError("wasted bits unsupported")
         warm = []
         for _ in range(order):
-            v = bits.read(8)
+            v = bits.bits(8)
             warm.append(v - 256 if v >= 128 else v)
-        if bits.read(2) != 0:
+        if bits.bits(2) != 0:
             raise ValueError("only 4-bit rice residuals supported")
-        if bits.read(4) != 0:
+        if bits.bits(4) != 0:
             raise ValueError("only partition order 0 supported")
-        rice = bits.read(4)
-        res = []
-        for _ in range(bsize - order):
-            q = bits.read_unary()
-            low = bits.read(rice) if rice else 0
-            z = (q << rice) | low
-            res.append((z >> 1) if z % 2 == 0 else -((z + 1) >> 1))
+        res = rice_get(bits, bsize - order)
         samples_frame = _flac_integrate(warm, res, order)
-        bits.read_align()
-        fend = bits.rpos // 8
-        if _crc16(blob[pos:pos + fend]) != bits.read(16):
+        bits.align()
+        if _crc16(blob[pos:bits.pos]) != bits.bits(16):
             raise ValueError("frame CRC-16 mismatch")
         samples.extend(samples_frame)
-        pos += fend + 2
+        pos = bits.pos
         n_frames += 1
     if len(samples) != total:
         raise ValueError("sample count mismatch vs STREAMINFO")
@@ -1978,25 +1650,13 @@ def flac_decode_features(media: DataFrame) -> DataFrame:
     path bit-exact over the text's byte values, exactly like
     ``mm_decode_wav``/``mm_decode_png``.
     """
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "sample_rate",
-                                    "n_frames", "max_amp", "mean_amp")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                rate, n_frames, back = _decode_flac(_encode_flac(payload))
-                if back != payload:
-                    raise ValueError("FLAC roundtrip not lossless")
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(len(back))
-                rows["sample_rate"].append(rate)
-                rows["n_frames"].append(n_frames)
-                rows["max_amp"].append(max(back) if back else 0)
-                rows["mean_amp"].append(
-                    sum(back) / len(back) if back else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        rate, n_frames, back = _decode_flac(_encode_flac(payload))
+        if back != payload:
+            raise ValueError("FLAC roundtrip not lossless")
+        return [(len(back), rate, n_frames, *_px_stats(back))]
 
-    return media.mapInPandas(kernel, schema=FLAC_SCHEMA)
+    return _codec_kernel(media, FLAC_SCHEMA, rows)
 
 
 # --- FLIC (Autodesk FLC) subset: real INTER-FRAME compressed video --------
@@ -2098,8 +1758,7 @@ def _encode_flic(payload: bytes, w: int = FLIC_W, h: int = FLIC_H) -> bytes:
         raise ValueError(   # class as the FLAC UTF-8 frame-number fix (r7)
             f"payload needs {nf} frames; FLC caps at 65535 "
             f"({0xFFFF * fs} bytes at {w}x{h})")
-    frames = [payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00")
-              for i in range(nf)]
+    frames = _frames_of(payload, fs)
 
     def chunk(ctype: int, data: bytes) -> bytes:
         return struct.pack("<IH", 6 + len(data), ctype) + data
@@ -2250,29 +1909,13 @@ def flic_decode_frames(media: DataFrame) -> DataFrame:
     math over the payload slice (zero-padded last frame), exactly like
     ``mm_decode_video``'s stats but through a genuinely predictive
     decode. Empty payloads are zero-frame files -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            fs = FLIC_W * FLIC_H
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames = _decode_flic(_encode_flic(payload))
-                for i, f in enumerate(frames):
-                    if f != payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"):
-                        raise ValueError("FLIC roundtrip not lossless")
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f))
-                    rows["mean_px"].append(sum(f) / fs)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        w, h, frames = _decode_flic(_encode_flic(payload))
+        if frames != _frames_of(payload, w * h):
+            raise ValueError("FLIC roundtrip not lossless")
+        return _frame_rows(frames, w, h)
 
-    return media.mapInPandas(kernel, schema=FLIC_SCHEMA)
+    return _codec_kernel(media, FLIC_SCHEMA, rows)
 
 
 # --- MDCT transform audio: real LOSSY audio coding, numpy + stdlib --------
@@ -2321,6 +1964,14 @@ def _mdct_n_blocks(n_samples: int, N: int = MDCT_N) -> int:
     return (n_samples + N - 1) // N + 1 if n_samples else 0
 
 
+def _sample_err(rec, payload: bytes) -> float:
+    """Max |reconstruction - original| over the centered 8-bit samples
+    (0.0 for an empty payload)."""
+    import numpy as np
+    orig = np.frombuffer(payload, dtype=np.uint8).astype(np.float64) - 128.0
+    return float(np.max(np.abs(rec - orig))) if len(payload) else 0.0
+
+
 def _encode_mdct(payload: bytes, N: int = MDCT_N, q: int = MDCT_Q) -> bytes:
     """Encode payload bytes (as centered 8-bit samples) to an MDC1
     stream: magic, (n_samples, N, q) header, then per block a 4-bit
@@ -2333,19 +1984,11 @@ def _encode_mdct(payload: bytes, N: int = MDCT_N, q: int = MDCT_Q) -> bytes:
     n_blocks = _mdct_n_blocks(len(samples), N)
     pad = np.zeros((n_blocks + 1) * N, dtype=np.float64)
     pad[N:N + len(samples)] = samples
-    bits = _Bits()
+    bits = MsbWriter()
     for i in range(n_blocks):
-        qc = np.round((M @ pad[i * N:(i + 2) * N]) / q).astype(np.int64)
-        mean = int(np.mean(np.abs(qc)))
-        rice = max(0, min(14, mean.bit_length()))
-        bits.put(rice, 4)
-        for v in qc:
-            z = (int(v) << 1) if v >= 0 else ((-int(v)) << 1) - 1
-            bits.unary(z >> rice)
-            if rice:
-                bits.put(z & ((1 << rice) - 1), rice)
+        rice_put(bits, np.round((M @ pad[i * N:(i + 2) * N]) / q))
         bits.align()
-    return b"MDC1" + struct.pack("<IHB", len(payload), N, q) + bits.bytes()
+    return b"MDC1" + struct.pack("<IHB", len(payload), N, q) + bits.flush()
 
 
 def _decode_mdct(blob: bytes):
@@ -2359,18 +2002,12 @@ def _decode_mdct(blob: bytes):
     n, N, q = struct.unpack_from("<IHB", blob, 4)
     M = _mdct_matrix(N)
     n_blocks = _mdct_n_blocks(n, N)
-    bits = _Bits(blob[11:])
+    bits = MsbReader(blob, 11, what="MDC1 stream")
     out = np.zeros((n_blocks + 1) * N, dtype=np.float64)
     for i in range(n_blocks):
-        rice = bits.read(4)
-        qc = np.empty(N, dtype=np.int64)
-        for j in range(N):
-            u = bits.read_unary()
-            low = bits.read(rice) if rice else 0
-            z = (u << rice) | low
-            qc[j] = (z >> 1) if z % 2 == 0 else -((z + 1) >> 1)
-        bits.read_align()
-        out[i * N:(i + 2) * N] += M.T @ (qc.astype(np.float64) * q)
+        qc = np.array(rice_get(bits, N), dtype=np.float64)
+        bits.align()
+        out[i * N:(i + 2) * N] += M.T @ (qc * q)
     return n, n_blocks, out[N:N + n]
 
 
@@ -2382,28 +2019,14 @@ def mdct_decode_features(media: DataFrame) -> DataFrame:
     count) plus the bound flag — the same oracle contract as
     ``mm_decode_jpeg``; the exact-valued proof lives in the hypothesis
     property tests, which hunt the whole byte-payload space."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "n_frames",
-                                    "block_n", "q", "err_le_16")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                n, n_blocks, rec = _decode_mdct(_encode_mdct(payload))
-                if n != len(payload):
-                    raise ValueError("MDC1 length mismatch")
-                orig = (np.frombuffer(payload, dtype=np.uint8)
-                        .astype(np.float64) - 128.0)
-                err = float(np.max(np.abs(rec - orig))) if n else 0.0
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(n)
-                rows["n_frames"].append(n_blocks)
-                rows["block_n"].append(MDCT_N)
-                rows["q"].append(MDCT_Q)
-                rows["err_le_16"].append(err <= MDCT_ERR_BOUND)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        n, n_blocks, rec = _decode_mdct(_encode_mdct(payload))
+        if n != len(payload):
+            raise ValueError("MDC1 length mismatch")
+        return [(n, n_blocks, MDCT_N, MDCT_Q,
+                 _sample_err(rec, payload) <= MDCT_ERR_BOUND)]
 
-    return media.mapInPandas(kernel, schema=MDCT_SCHEMA)
+    return _codec_kernel(media, MDCT_SCHEMA, rows)
 
 
 # --- Motion-compensated video: real MOTION ESTIMATION, numpy + stdlib -----
@@ -2438,73 +2061,99 @@ def _mcv_n_frames(n: int, fs: int) -> int:
     return max(1, (n + fs - 1) // fs) if n else 0
 
 
-def _mcv_rice_block(bits: "_Bits", vals) -> None:
-    """4-bit Rice parameter (from the mean magnitude, as in the FLAC
-    subset) + zigzag-Rice-coded signed values."""
-    mean = int(sum(abs(int(v)) for v in vals) / len(vals))
-    rice = max(0, min(14, mean.bit_length()))
-    bits.put(rice, 4)
-    for v in vals:
-        v = int(v)
-        z = (v << 1) if v >= 0 else ((-v) << 1) - 1
-        bits.unary(z >> rice)
-        if rice:
-            bits.put(z & ((1 << rice) - 1), rice)
-
-
-def _mcv_rice_read(bits: "_Bits", count: int):
-    rice = bits.read(4)
-    out = []
-    for _ in range(count):
-        z = (bits.read_unary() << rice) | (bits.read(rice) if rice else 0)
-        out.append((z >> 1) if z % 2 == 0 else -((z + 1) >> 1))
-    return out
-
-
-def _encode_mcv(payload: bytes, w: int = MCV_W, h: int = MCV_H,
-                b: int = MCV_B, r: int = MCV_R) -> bytes:
-    """Encode payload bytes as an MCV1 stream. Deterministic motion
-    search: candidates scanned dy then dx ascending, strictly-smaller
-    SAD wins — ties resolve to the smallest (dy, dx)."""
+def _planes(payload: bytes, w: int, h: int) -> list:
+    """The payload's zero-padded frames as (h, w) int64 pixel planes."""
     import numpy as np
+    return [np.frombuffer(f, dtype=np.uint8).astype(np.int64).reshape(h, w)
+            for f in _frames_of(payload, w * h)]
+
+
+def _best_mv(cur, ref, by: int, bx: int, b: int, r: int, h: int, w: int):
+    """Exhaustive SAD block matching of ``cur`` (the b x b block at
+    (by, bx)) against ``ref`` within +/- r px: candidates scanned dy
+    then dx ascending, strictly-smaller SAD wins — ties resolve to the
+    smallest (dy, dx). Returns (sad, dy, dx, predictor block)."""
+    import numpy as np
+    best = None
+    for dy in range(-r, r + 1):
+        if not (0 <= by + dy and by + dy + b <= h):
+            continue
+        for dx in range(-r, r + 1):
+            if not (0 <= bx + dx and bx + dx + b <= w):
+                continue
+            cand = ref[by + dy:by + dy + b, bx + dx:bx + dx + b]
+            sad = int(np.abs(cur - cand).sum())
+            if best is None or sad < best[0]:
+                best = (sad, dy, dx, cand)
+    return best
+
+
+def _check_mcv_geometry(w: int, h: int, b: int, r: int) -> None:
     if w % b or h % b:
         raise ValueError("block size must divide frame dims")
     if r > 7:
         raise ValueError("search range must fit a signed nibble")
-    fs = w * h
-    nf = _mcv_n_frames(len(payload), fs)
-    bits = _Bits()
+
+
+def _encode_mcv(payload: bytes, w: int = MCV_W, h: int = MCV_H,
+                b: int = MCV_B, r: int = MCV_R) -> bytes:
+    """Encode payload bytes as an MCV1 stream: the I-frame's blocks
+    Rice-code (pixel - 128); each P-frame block codes its
+    :func:`_best_mv` vector as a nibble pair, then its residual."""
+    _check_mcv_geometry(w, h, b, r)
+    bits = MsbWriter()
     prev = None
-    for i in range(nf):
-        f = np.frombuffer(
-            payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
-            dtype=np.uint8).astype(np.int64).reshape(h, w)
+    for f in _planes(payload, w, h):
         for by in range(0, h, b):
             for bx in range(0, w, b):
                 cur = f[by:by + b, bx:bx + b]
                 if prev is None:
-                    _mcv_rice_block(bits, (cur - 128).ravel())
+                    rice_put(bits, (cur - 128).ravel())
                     continue
-                best = None
-                for dy in range(-r, r + 1):
-                    if not (0 <= by + dy and by + dy + b <= h):
-                        continue
-                    for dx in range(-r, r + 1):
-                        if not (0 <= bx + dx and bx + dx + b <= w):
-                            continue
-                        cand = prev[by + dy:by + dy + b,
-                                    bx + dx:bx + dx + b]
-                        sad = int(np.abs(cur - cand).sum())
-                        if best is None or sad < best[0]:
-                            best = (sad, dy, dx, cand)
-                _sad, dy, dx, pred = best
+                _sad, dy, dx, pred = _best_mv(cur, prev, by, bx, b, r, h, w)
                 bits.put(((dy + r) << 4) | (dx + r), 8)
-                _mcv_rice_block(bits, (cur - pred).ravel())
+                rice_put(bits, (cur - pred).ravel())
         bits.align()
         prev = f                       # lossless: reconstructed == input
     return (MCV_MAGIC
             + struct.pack("<IHHBB", len(payload), w, h, b, r)
-            + bits.bytes())
+            + bits.flush())
+
+
+def _mcv_block(bits: MsbReader, pred, b: int):
+    """Decode one block: the Rice-coded residual added to ``pred``,
+    range-checked to 8-bit pixels."""
+    import numpy as np
+    blk = pred + np.array(rice_get(bits, b * b), dtype=np.int64).reshape(b, b)
+    if blk.min() < 0 or blk.max() > 255:
+        raise ValueError("reconstructed pixel out of range")
+    return blk
+
+
+def _mcv_header(blob: bytes, magic: bytes, fmt: str = "<IHHBB") -> tuple:
+    """Check an MCV-family stream's length, magic and block geometry;
+    returns the ``fmt`` header fields (payload_len, w, h, b, r, ...)."""
+    name = magic.decode()
+    if len(blob) < 4 + struct.calcsize(fmt):
+        raise ValueError(f"{name} header truncated")
+    if blob[:4] != magic:
+        raise ValueError(f"not an {name} stream")
+    fields = struct.unpack_from(fmt, blob, 4)
+    _n, w, h, b = fields[:4]
+    if w % b or h % b:
+        raise ValueError("block size must divide frame dims")
+    return fields
+
+
+def _nibble_mv(mv: int, by: int, bx: int, b: int, r: int, h: int,
+               w: int) -> tuple[int, int]:
+    """Unpack a (dy + r, dx + r) nibble-pair vector; the block it points
+    at must lie inside the frame."""
+    dy, dx = (mv >> 4) - r, (mv & 0xF) - r
+    if not (0 <= by + dy and by + dy + b <= h
+            and 0 <= bx + dx and bx + dx + b <= w):
+        raise ValueError("motion vector outside frame")
+    return dy, dx
 
 
 def _decode_mcv(blob: bytes):
@@ -2513,46 +2162,29 @@ def _decode_mcv(blob: bytes):
     (dy, dx) per block in scan order. Strict: magic, geometry, vector
     range, pixel range and trailing bytes all raise."""
     import numpy as np
-    if len(blob) < 14:
-        raise ValueError("MCV1 header truncated")
-    if blob[:4] != MCV_MAGIC:
-        raise ValueError("not an MCV1 stream")
-    n, w, h, b, r = struct.unpack_from("<IHHBB", blob, 4)
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
-    fs = w * h
-    nf = _mcv_n_frames(n, fs)
-    bits = _Bits(blob[14:])
+    n, w, h, b, r = _mcv_header(blob, MCV_MAGIC)
+    bits = MsbReader(blob, 14, what="MCV1 stream")
     frames: list[bytes] = []
     mvs: list[list[tuple[int, int]]] = []
     prev = None
-    for i in range(nf):
+    for _ in range(_mcv_n_frames(n, w * h)):
         rec = np.empty((h, w), dtype=np.int64)
         fmv: list[tuple[int, int]] = []
         for by in range(0, h, b):
             for bx in range(0, w, b):
                 if prev is None:
-                    pred = np.full((b, b), 128, dtype=np.int64)
+                    pred = 128
                 else:
-                    mv = bits.read(8)
-                    dy, dx = (mv >> 4) - r, (mv & 0xF) - r
-                    if not (0 <= by + dy and by + dy + b <= h
-                            and 0 <= bx + dx and bx + dx + b <= w):
-                        raise ValueError("motion vector outside frame")
+                    dy, dx = _nibble_mv(bits.bits(8), by, bx, b, r, h, w)
                     fmv.append((dy, dx))
                     pred = prev[by + dy:by + dy + b, bx + dx:bx + dx + b]
-                resid = np.array(_mcv_rice_read(bits, b * b),
-                                 dtype=np.int64).reshape(b, b)
-                blk = pred + resid
-                if blk.min() < 0 or blk.max() > 255:
-                    raise ValueError("reconstructed pixel out of range")
-                rec[by:by + b, bx:bx + b] = blk
-        bits.read_align()
+                rec[by:by + b, bx:bx + b] = _mcv_block(bits, pred, b)
+        bits.align()
         if prev is not None:
             mvs.append(fmv)
         prev = rec
         frames.append(rec.astype(np.uint8).tobytes())
-    if (bits.rpos >> 3) != len(bits.data):
+    if bits.pos != len(blob):
         raise ValueError("trailing bytes after last frame")
     return w, h, frames, mvs
 
@@ -2569,26 +2201,11 @@ def mcv_decode_frames(media: DataFrame) -> DataFrame:
     the same contract as ``flic_decode_frames`` but through genuine
     motion search rather than line deltas. Empty payloads are
     zero-frame streams -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, _mvs = _decode_mcv(_encode_mcv(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        w, h, frames, _side = _decode_mcv(_encode_mcv(payload))
+        return _frame_rows(frames, w, h)
 
-    return media.mapInPandas(kernel, schema=MCV_SCHEMA)
+    return _codec_kernel(media, MCV_SCHEMA, rows)
 
 
 # --- MCV2: HALF-PEL motion (sub-pixel estimation + compensation) ----------
@@ -2629,24 +2246,16 @@ def _encode_mcv2(payload: bytes, w: int = MCV_W, h: int = MCV_H,
     smaller SAD wins — ties resolve to the smallest (dy, dx), so a
     zero vector beats any equal-cost sub-pixel one."""
     import numpy as np
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
-    if r > 7:
-        raise ValueError("search range must keep 4r within 5 bits")
-    fs = w * h
-    nf = _mcv_n_frames(len(payload), fs)
-    bits = _Bits()
+    _check_mcv_geometry(w, h, b, r)     # r <= 7 keeps 4r within 5 bits
+    bits = MsbWriter()
     prev = None
-    for i in range(nf):
-        f = np.frombuffer(
-            payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
-            dtype=np.uint8).astype(np.int64).reshape(h, w)
+    for f in _planes(payload, w, h):
         H = _half_pel_plane(prev) if prev is not None else None
         for by in range(0, h, b):
             for bx in range(0, w, b):
                 cur = f[by:by + b, bx:bx + b]
                 if prev is None:
-                    _mcv_rice_block(bits, (cur - 128).ravel())
+                    rice_put(bits, (cur - 128).ravel())
                     continue
                 best = None
                 for dy in range(-2 * r, 2 * r + 1):
@@ -2664,12 +2273,12 @@ def _encode_mcv2(payload: bytes, w: int = MCV_W, h: int = MCV_H,
                 _sad, dy, dx, pred = best
                 bits.put(dy + 2 * r, 5)
                 bits.put(dx + 2 * r, 5)
-                _mcv_rice_block(bits, (cur - pred).ravel())
+                rice_put(bits, (cur - pred).ravel())
         bits.align()
         prev = f                       # lossless: reconstructed == input
     return (MCV2_MAGIC
             + struct.pack("<IHHBB", len(payload), w, h, b, r)
-            + bits.bytes())
+            + bits.flush())
 
 
 def _decode_mcv2(blob: bytes):
@@ -2678,30 +2287,22 @@ def _decode_mcv2(blob: bytes):
     order. Strict: header length, magic, geometry, vector range, pixel
     range and trailing bytes all raise ValueError."""
     import numpy as np
-    if len(blob) < 14:
-        raise ValueError("MCV2 header truncated")
-    if blob[:4] != MCV2_MAGIC:
-        raise ValueError("not an MCV2 stream")
-    n, w, h, b, r = struct.unpack_from("<IHHBB", blob, 4)
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
-    fs = w * h
-    nf = _mcv_n_frames(n, fs)
-    bits = _Bits(blob[14:])
+    n, w, h, b, r = _mcv_header(blob, MCV2_MAGIC)
+    bits = MsbReader(blob, 14, what="MCV2 stream")
     frames: list[bytes] = []
     mvs: list[list[tuple[int, int]]] = []
     prev = None
-    for i in range(nf):
+    for _ in range(_mcv_n_frames(n, w * h)):
         rec = np.empty((h, w), dtype=np.int64)
         H = _half_pel_plane(prev) if prev is not None else None
         fmv: list[tuple[int, int]] = []
         for by in range(0, h, b):
             for bx in range(0, w, b):
                 if prev is None:
-                    pred = np.full((b, b), 128, dtype=np.int64)
+                    pred = 128
                 else:
-                    dy = bits.read(5) - 2 * r
-                    dx = bits.read(5) - 2 * r
+                    dy = bits.bits(5) - 2 * r
+                    dx = bits.bits(5) - 2 * r
                     ty, tx = 2 * by + dy, 2 * bx + dx
                     if not (abs(dy) <= 2 * r and abs(dx) <= 2 * r
                             and 0 <= ty <= 2 * (h - b)
@@ -2709,18 +2310,13 @@ def _decode_mcv2(blob: bytes):
                         raise ValueError("motion vector outside frame")
                     fmv.append((dy, dx))
                     pred = H[ty:ty + 2 * b:2, tx:tx + 2 * b:2]
-                resid = np.array(_mcv_rice_read(bits, b * b),
-                                 dtype=np.int64).reshape(b, b)
-                blk = pred + resid
-                if blk.min() < 0 or blk.max() > 255:
-                    raise ValueError("reconstructed pixel out of range")
-                rec[by:by + b, bx:bx + b] = blk
-        bits.read_align()
+                rec[by:by + b, bx:bx + b] = _mcv_block(bits, pred, b)
+        bits.align()
         if prev is not None:
             mvs.append(fmv)
         prev = rec
         frames.append(rec.astype(np.uint8).tobytes())
-    if (bits.rpos >> 3) != len(bits.data):
+    if bits.pos != len(blob):
         raise ValueError("trailing bytes after last frame")
     return w, h, frames, mvs
 
@@ -2737,26 +2333,11 @@ def mcv2_decode_frames(media: DataFrame) -> DataFrame:
     byte math over the payload slice (zero-padded last frame) — the
     same contract as ``mcv_decode_frames``, one motion rung up. Empty
     payloads are zero-frame streams -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, _mvs = _decode_mcv2(_encode_mcv2(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        w, h, frames, _side = _decode_mcv2(_encode_mcv2(payload))
+        return _frame_rows(frames, w, h)
 
-    return media.mapInPandas(kernel, schema=MCV_SCHEMA)
+    return _codec_kernel(media, MCV_SCHEMA, rows)
 
 
 # --- MCV3: RATE-BASED MODE DECISION + ADAPTIVE BINARY RANGE CODING --------
@@ -2975,10 +2556,6 @@ def _mcv3_emit(ops, enc: _RcEnc, probs) -> None:
             enc.direct(op[1], op[2])
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) if v >= 0 else ((-v) << 1) - 1
-
-
 def _mcv3_intra_pred(rec, by: int, bx: int, b: int) -> int:
     """H.264-shaped intra-DC predictor: mean of the already-
     reconstructed row above and column left of the block in the
@@ -3003,21 +2580,13 @@ def _encode_mcv3(payload: bytes, w: int = MCV_W, h: int = MCV_H,
     rate with ties resolving SKIP < INTER < INTRA (candidates are
     priced in that order, strict < wins)."""
     import numpy as np
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
-    if r > 7:
-        raise ValueError("search range must fit a signed nibble")
-    fs = w * h
-    nf = _mcv_n_frames(len(payload), fs)
-    if nf == 0:
+    _check_mcv_geometry(w, h, b, r)
+    if not payload:
         return MCV3_MAGIC + struct.pack("<IHHBBI", 0, w, h, b, r, 0)
     enc = _RcEnc()
     probs = [_RC_PROB_INIT] * _MCV3_N_CTX
     prev = None
-    for i in range(nf):
-        f = np.frombuffer(
-            payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
-            dtype=np.uint8).astype(np.int64).reshape(h, w)
+    for f in _planes(payload, w, h):
         rec = np.empty((h, w), dtype=np.int64)
         for by in range(0, h, b):
             for bx in range(0, w, b):
@@ -3025,7 +2594,7 @@ def _encode_mcv3(payload: bytes, w: int = MCV_W, h: int = MCV_H,
                 if prev is None:                       # I-frame: INTRA
                     dc = _mcv3_intra_pred(rec, by, bx, b)
                     ops = list(_mcv3_resid_bits(
-                        [_zigzag(int(v)) for v in (cur - dc).ravel()],
+                        [zigzag(int(v)) for v in (cur - dc).ravel()],
                         _MCV3_CTX_RES[0]))
                     _mcv3_emit(ops, enc, probs)
                     rec[by:by + b, bx:bx + b] = cur
@@ -3036,26 +2605,14 @@ def _encode_mcv3(payload: bytes, w: int = MCV_W, h: int = MCV_H,
                 if np.array_equal(cur, colo):
                     cands.append(("S", [("bit", _MCV3_CTX_SKIP, 1)]))
                 # candidate INTER: SAD-best vector (MCV1 search)
-                best = None
-                for dy in range(-r, r + 1):
-                    if not (0 <= by + dy and by + dy + b <= h):
-                        continue
-                    for dx in range(-r, r + 1):
-                        if not (0 <= bx + dx and bx + dx + b <= w):
-                            continue
-                        cand = prev[by + dy:by + dy + b,
-                                    bx + dx:bx + dx + b]
-                        sad = int(np.abs(cur - cand).sum())
-                        if best is None or sad < best[0]:
-                            best = (sad, dy, dx, cand)
-                _sad, dy, dx, pred = best
+                _sad, dy, dx, pred = _best_mv(cur, prev, by, bx, b, r, h, w)
                 mv = ((dy + r) << 4) | (dx + r)
                 inter_ops = ([("bit", _MCV3_CTX_SKIP, 0),
                               ("bit", _MCV3_CTX_INTRA, 0)]
                              + [("bit", _MCV3_CTX_MV + j,
                                  (mv >> (7 - j)) & 1) for j in range(8)]
                              + list(_mcv3_resid_bits(
-                                 [_zigzag(int(v))
+                                 [zigzag(int(v))
                                   for v in (cur - pred).ravel()],
                                  _MCV3_CTX_RES[1])))
                 cands.append(("P", inter_ops))
@@ -3064,7 +2621,7 @@ def _encode_mcv3(payload: bytes, w: int = MCV_W, h: int = MCV_H,
                 intra_ops = ([("bit", _MCV3_CTX_SKIP, 0),
                               ("bit", _MCV3_CTX_INTRA, 1)]
                              + list(_mcv3_resid_bits(
-                                 [_zigzag(int(v))
+                                 [zigzag(int(v))
                                   for v in (cur - dc).ravel()],
                                  _MCV3_CTX_RES[0])))
                 cands.append(("I", intra_ops))
@@ -3091,13 +2648,7 @@ def _decode_mcv3(blob: bytes):
     geometry, coded-length mismatch (both directions), vector range,
     pixel range and trailing bytes all raise ValueError."""
     import numpy as np
-    if len(blob) < 18:
-        raise ValueError("MCV3 header truncated")
-    if blob[:4] != MCV3_MAGIC:
-        raise ValueError("not an MCV3 stream")
-    n, w, h, b, r, coded_len = struct.unpack_from("<IHHBBI", blob, 4)
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
+    n, w, h, b, r, coded_len = _mcv_header(blob, MCV3_MAGIC, "<IHHBBI")
     if len(blob) - 18 != coded_len:
         raise ValueError("MCV3 coded length mismatch")
     fs = w * h
@@ -3117,8 +2668,7 @@ def _decode_mcv3(blob: bytes):
                 k += 1
                 if k > 9:
                     raise ValueError("residual magnitude out of range")
-            z = (1 << k) + (dec.direct(k) if k else 0) - 1
-            out.append((z >> 1) if z % 2 == 0 else -((z + 1) >> 1))
+            out.append(unzigzag((1 << k) + (dec.direct(k) if k else 0) - 1))
         return out
 
     frames: list[bytes] = []
@@ -3147,10 +2697,7 @@ def _decode_mcv3(blob: bytes):
                     mv = 0
                     for j in range(8):
                         mv = (mv << 1) | dec.bit(probs, _MCV3_CTX_MV + j)
-                    dy, dx = (mv >> 4) - r, (mv & 0xF) - r
-                    if not (0 <= by + dy and by + dy + b <= h
-                            and 0 <= bx + dx and bx + dx + b <= w):
-                        raise ValueError("motion vector outside frame")
+                    dy, dx = _nibble_mv(mv, by, bx, b, r, h, w)
                     pred = prev[by + dy:by + dy + b, bx + dx:bx + dx + b]
                     resid = np.array(read_resid(b * b, _MCV3_CTX_RES[1]),
                                      dtype=np.int64).reshape(b, b)
@@ -3181,26 +2728,11 @@ def mcv3_decode_frames(media: DataFrame) -> DataFrame:
     byte math over the payload slice (zero-padded last frame) — the
     same contract as ``mcv_decode_frames``/``mcv2_decode_frames``.
     Empty payloads are zero-frame streams -> zero rows."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "is_key", "max_px",
-                                    "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, _modes = _decode_mcv3(_encode_mcv3(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["is_key"].append(i == 0)
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        w, h, frames, _side = _decode_mcv3(_encode_mcv3(payload))
+        return _frame_rows(frames, w, h)
 
-    return media.mapInPandas(kernel, schema=MCV_SCHEMA)
+    return _codec_kernel(media, MCV_SCHEMA, rows)
 
 
 # --- PAC1: PSYCHOACOUSTIC bit allocation over the MDCT core ---------------
@@ -3285,7 +2817,7 @@ def _encode_pac(payload: bytes, N: int = MDCT_N) -> bytes:
     n_blocks = _mdct_n_blocks(len(samples), N)
     pad = np.zeros((n_blocks + 1) * N, dtype=np.float64)
     pad[N:N + len(samples)] = samples
-    bits = _Bits()
+    bits = MsbWriter()
     prev_steps = None
     for i in range(n_blocks):
         X = M @ pad[i * N:(i + 2) * N]
@@ -3299,10 +2831,9 @@ def _encode_pac(payload: bytes, N: int = MDCT_N) -> bytes:
         prev_steps = steps
         for bi in range(PAC_N_BANDS):
             lo, hi = PAC_BAND_EDGES[bi], PAC_BAND_EDGES[bi + 1]
-            qc = np.round(X[lo:hi] / steps[bi]).astype(np.int64)
-            _mcv_rice_block(bits, qc)
+            rice_put(bits, np.round(X[lo:hi] / steps[bi]))
         bits.align()
-    return PAC_MAGIC + struct.pack("<IH", len(payload), N) + bits.bytes()
+    return PAC_MAGIC + struct.pack("<IH", len(payload), N) + bits.flush()
 
 
 def _decode_pac(blob: bytes):
@@ -3321,14 +2852,14 @@ def _decode_pac(blob: bytes):
         raise ValueError("PAC1 block size must match the band table")
     M = _mdct_matrix(N)
     n_blocks = _mdct_n_blocks(n, N)
-    bits = _Bits(blob[10:])
+    bits = MsbReader(blob, 10, what="PAC1 stream")
     out = np.zeros((n_blocks + 1) * N, dtype=np.float64)
     all_steps: list[list[int]] = []
     worst = 0.0
     prev_steps = None
     for i in range(n_blocks):
-        if bits.read(1):
-            steps = [bits.read(8) + 1 for _ in range(PAC_N_BANDS)]
+        if bits.bits(1):
+            steps = [bits.bits(8) + 1 for _ in range(PAC_N_BANDS)]
         elif prev_steps is None:
             raise ValueError("first PAC1 block cannot reuse steps")
         else:
@@ -3338,15 +2869,14 @@ def _decode_pac(blob: bytes):
         X = np.empty(N, dtype=np.float64)
         for bi in range(PAC_N_BANDS):
             lo, hi = PAC_BAND_EDGES[bi], PAC_BAND_EDGES[bi + 1]
-            X[lo:hi] = (np.array(_mcv_rice_read(bits, hi - lo),
-                                 dtype=np.float64) * steps[bi])
-        bits.read_align()
+            X[lo:hi] = np.array(rice_get(bits, hi - lo)) * float(steps[bi])
+        bits.align()
         out[i * N:(i + 2) * N] += M.T @ X
         worst = max(worst, sum((q / 2.0) ** 2
                                for bi, q in enumerate(steps)
                                for _ in range(PAC_BAND_EDGES[bi + 1]
                                               - PAC_BAND_EDGES[bi])))
-    if (bits.rpos >> 3) != len(bits.data):
+    if bits.pos != len(blob):
         raise ValueError("trailing bytes after last block")
     bound = (2.0 * worst) ** 0.5
     return n, n_blocks, out[N:N + n], all_steps, bound
@@ -3363,28 +2893,14 @@ def pac_decode_features(media: DataFrame) -> DataFrame:
     flag — the same oracle contract as ``mm_decode_mdct``; the
     exact-valued proof and the masking-behavior tests live in the
     property suite."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "n_samples", "n_frames",
-                                    "n_bands", "err_le_bound")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                n, n_blocks, rec, _steps, bound = _decode_pac(
-                    _encode_pac(payload))
-                if n != len(payload):
-                    raise ValueError("PAC1 length mismatch")
-                orig = (np.frombuffer(payload, dtype=np.uint8)
-                        .astype(np.float64) - 128.0)
-                err = float(np.max(np.abs(rec - orig))) if n else 0.0
-                rows["doc_id"].append(doc_id)
-                rows["n_samples"].append(n)
-                rows["n_frames"].append(n_blocks)
-                rows["n_bands"].append(PAC_N_BANDS)
-                rows["err_le_bound"].append(err <= bound + 1e-9)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        n, n_blocks, rec, _steps, bound = _decode_pac(_encode_pac(payload))
+        if n != len(payload):
+            raise ValueError("PAC1 length mismatch")
+        return [(n, n_blocks, PAC_N_BANDS,
+                 _sample_err(rec, payload) <= bound + 1e-9)]
 
-    return media.mapInPandas(kernel, schema=PAC_SCHEMA)
+    return _codec_kernel(media, PAC_SCHEMA, rows)
 
 
 # --- MCV4: BIDIRECTIONAL (B-frame) motion ----------------------------------
@@ -3404,6 +2920,8 @@ def pac_decode_features(media: DataFrame) -> DataFrame:
 
 MCV4_MAGIC = b"MCV4"
 MCV4_GOP = 3                   # anchor spacing in display order
+MCV4_SCHEMA = ("doc_id bigint, frame_idx int, n_frames int, width int, "
+               "height int, frame_type string, max_px int, mean_px double")
 
 
 def _mcv4_frame_plan(nf: int):
@@ -3424,23 +2942,6 @@ def _mcv4_frame_plan(nf: int):
     return anchors, order, types
 
 
-def _mcv4_best_mv(cur, ref, by, bx, b, r, h, w):
-    """MCV1's exhaustive deterministic SAD scan against ``ref``."""
-    import numpy as np
-    best = None
-    for dy in range(-r, r + 1):
-        if not (0 <= by + dy and by + dy + b <= h):
-            continue
-        for dx in range(-r, r + 1):
-            if not (0 <= bx + dx and bx + dx + b <= w):
-                continue
-            cand = ref[by + dy:by + dy + b, bx + dx:bx + dx + b]
-            sad = int(np.abs(cur - cand).sum())
-            if best is None or sad < best[0]:
-                best = (sad, dy, dx, cand)
-    return best
-
-
 def _encode_mcv4(payload: bytes, w: int = MCV_W, h: int = MCV_H,
                  b: int = MCV_B, r: int = MCV_R) -> bytes:
     """Encode payload bytes as an MCV4 stream (see the section comment
@@ -3448,24 +2949,16 @@ def _encode_mcv4(payload: bytes, w: int = MCV_W, h: int = MCV_H,
     forward, 01 backward, 10 bidirectional), the mode's vector(s) as
     8-bit nibble pairs, then the Rice residual."""
     import numpy as np
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
-    if r > 7:
-        raise ValueError("search range must fit a signed nibble")
-    fs = w * h
-    nf = _mcv_n_frames(len(payload), fs)
-    anchors, order, types = _mcv4_frame_plan(nf)
-    frames = [np.frombuffer(
-        payload[i * fs:(i + 1) * fs].ljust(fs, b"\x00"),
-        dtype=np.uint8).astype(np.int64).reshape(h, w) for i in range(nf)]
-    bits = _Bits()
+    _check_mcv_geometry(w, h, b, r)
+    frames = _planes(payload, w, h)
+    anchors, order, types = _mcv4_frame_plan(len(frames))
+    bits = MsbWriter()
     for fi in order:
         f = frames[fi]
         if types[fi] == "I":
             for by in range(0, h, b):
                 for bx in range(0, w, b):
-                    _mcv_rice_block(
-                        bits, (f[by:by + b, bx:bx + b] - 128).ravel())
+                    rice_put(bits, (f[by:by + b, bx:bx + b] - 128).ravel())
             bits.align()
             continue
         if types[fi] == "P":
@@ -3473,10 +2966,9 @@ def _encode_mcv4(payload: bytes, w: int = MCV_W, h: int = MCV_H,
             for by in range(0, h, b):
                 for bx in range(0, w, b):
                     cur = f[by:by + b, bx:bx + b]
-                    _sad, dy, dx, pred = _mcv4_best_mv(
-                        cur, ref, by, bx, b, r, h, w)
+                    _sad, dy, dx, pred = _best_mv(cur, ref, by, bx, b, r, h, w)
                     bits.put(((dy + r) << 4) | (dx + r), 8)
-                    _mcv_rice_block(bits, (cur - pred).ravel())
+                    rice_put(bits, (cur - pred).ravel())
             bits.align()
             continue
         # B frame: surrounding anchors (both already coded)
@@ -3486,10 +2978,8 @@ def _encode_mcv4(payload: bytes, w: int = MCV_W, h: int = MCV_H,
         for by in range(0, h, b):
             for bx in range(0, w, b):
                 cur = f[by:by + b, bx:bx + b]
-                sf_, fdy, fdx, fpred = _mcv4_best_mv(
-                    cur, fref, by, bx, b, r, h, w)
-                sb_, bdy, bdx, bpred = _mcv4_best_mv(
-                    cur, bref, by, bx, b, r, h, w)
+                sf_, fdy, fdx, fpred = _best_mv(cur, fref, by, bx, b, r, h, w)
+                sb_, bdy, bdx, bpred = _best_mv(cur, bref, by, bx, b, r, h, w)
                 bipred = (fpred + bpred + 1) >> 1
                 sbi = int(np.abs(cur - bipred).sum())
                 mode, pred = 0, fpred
@@ -3503,11 +2993,11 @@ def _encode_mcv4(payload: bytes, w: int = MCV_W, h: int = MCV_H,
                     bits.put(((fdy + r) << 4) | (fdx + r), 8)
                 if mode in (1, 2):
                     bits.put(((bdy + r) << 4) | (bdx + r), 8)
-                _mcv_rice_block(bits, (cur - pred).ravel())
+                rice_put(bits, (cur - pred).ravel())
         bits.align()
     return (MCV4_MAGIC
             + struct.pack("<IHHBB", len(payload), w, h, b, r)
-            + bits.bytes())
+            + bits.flush())
 
 
 def _decode_mcv4(blob: bytes):
@@ -3519,36 +3009,12 @@ def _decode_mcv4(blob: bytes):
     mode value 3, vector range, pixel range and trailing bytes all
     raise ValueError."""
     import numpy as np
-    if len(blob) < 14:
-        raise ValueError("MCV4 header truncated")
-    if blob[:4] != MCV4_MAGIC:
-        raise ValueError("not an MCV4 stream")
-    n, w, h, b, r = struct.unpack_from("<IHHBB", blob, 4)
-    if w % b or h % b:
-        raise ValueError("block size must divide frame dims")
-    fs = w * h
-    nf = _mcv_n_frames(n, fs)
+    n, w, h, b, r = _mcv_header(blob, MCV4_MAGIC)
+    nf = _mcv_n_frames(n, w * h)
     anchors, order, types = _mcv4_frame_plan(nf)
-    bits = _Bits(blob[14:])
+    bits = MsbReader(blob, 14, what="MCV4 stream")
     rec: dict[int, "np.ndarray"] = {}
     modes: dict[int, list] = {}
-
-    def read_block(pred):
-        resid = np.array(_mcv_rice_read(bits, b * b),
-                         dtype=np.int64).reshape(b, b)
-        blk = pred + resid
-        if blk.min() < 0 or blk.max() > 255:
-            raise ValueError("reconstructed pixel out of range")
-        return blk
-
-    def read_mv(by, bx):
-        mv = bits.read(8)
-        dy, dx = (mv >> 4) - r, (mv & 0xF) - r
-        if not (0 <= by + dy and by + dy + b <= h
-                and 0 <= bx + dx and bx + dx + b <= w):
-            raise ValueError("motion vector outside frame")
-        return dy, dx
-
     for fi in order:
         out = np.empty((h, w), dtype=np.int64)
         if types[fi] == "B":
@@ -3559,23 +3025,24 @@ def _decode_mcv4(blob: bytes):
         for by in range(0, h, b):
             for bx in range(0, w, b):
                 if types[fi] == "I":
-                    out[by:by + b, bx:bx + b] = read_block(
-                        np.full((b, b), 128, dtype=np.int64))
+                    out[by:by + b, bx:bx + b] = _mcv_block(bits, 128, b)
                 elif types[fi] == "P":
                     ref = rec[anchors[anchors.index(fi) - 1]]
-                    dy, dx = read_mv(by, bx)
-                    out[by:by + b, bx:bx + b] = read_block(
-                        ref[by + dy:by + dy + b, bx + dx:bx + dx + b])
+                    dy, dx = _nibble_mv(bits.bits(8), by, bx, b, r, h, w)
+                    out[by:by + b, bx:bx + b] = _mcv_block(
+                        bits, ref[by + dy:by + dy + b, bx + dx:bx + dx + b], b)
                 else:
-                    mode = bits.read(2)
+                    mode = bits.bits(2)
                     if mode == 3:
                         raise ValueError("reserved B-block mode")
                     if mode in (0, 2):
-                        fdy, fdx = read_mv(by, bx)
+                        fdy, fdx = _nibble_mv(bits.bits(8), by, bx, b, r,
+                                              h, w)
                         fpred = fref[by + fdy:by + fdy + b,
                                      bx + fdx:bx + fdx + b]
                     if mode in (1, 2):
-                        bdy, bdx = read_mv(by, bx)
+                        bdy, bdx = _nibble_mv(bits.bits(8), by, bx, b, r,
+                                              h, w)
                         bpred = bref[by + bdy:by + bdy + b,
                                      bx + bdx:bx + bdx + b]
                     if mode == 0:
@@ -3586,12 +3053,12 @@ def _decode_mcv4(blob: bytes):
                         pred = (fpred + bpred + 1) >> 1
                         info = ("BI", fdy, fdx, bdy, bdx)
                     fmodes.append(info)
-                    out[by:by + b, bx:bx + b] = read_block(pred)
-        bits.read_align()
+                    out[by:by + b, bx:bx + b] = _mcv_block(bits, pred, b)
+        bits.align()
         rec[fi] = out
         if types[fi] == "B":
             modes[fi] = fmodes
-    if (bits.rpos >> 3) != len(bits.data):
+    if bits.pos != len(blob):
         raise ValueError("trailing bytes after last frame")
     frames = [rec[i].astype(np.uint8).tobytes() for i in range(nf)]
     return w, h, frames, types, [modes[i] for i in sorted(modes)]
@@ -3610,30 +3077,11 @@ def mcv4_decode_frames(media: DataFrame) -> DataFrame:
     count (anchors every 3rd frame + the last frame) and so stay
     SQL-expressible. Empty payloads are zero-frame streams -> zero
     rows."""
-    schema = ("doc_id bigint, frame_idx int, n_frames int, width int, "
-              "height int, frame_type string, max_px int, mean_px double")
+    def rows(payload: bytes):
+        w, h, frames, types, _modes = _decode_mcv4(_encode_mcv4(payload))
+        return _frame_rows(frames, w, h, types)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "n_frames",
-                                    "width", "height", "frame_type",
-                                    "max_px", "mean_px")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                payload = bytes(payload)
-                w, h, frames, types, _modes = _decode_mcv4(
-                    _encode_mcv4(payload))
-                for i, f in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["n_frames"].append(len(frames))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["frame_type"].append(types[i])
-                    rows["max_px"].append(max(f) if f else 0)
-                    rows["mean_px"].append(sum(f) / len(f) if f else 0.0)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(kernel, schema=schema)
+    return _codec_kernel(media, MCV4_SCHEMA, rows)
 
 
 # --- perceptual-hash (dHash) image fingerprinting ------------------------
@@ -3664,34 +3112,24 @@ PHASH_SCHEMA = "doc_id bigint, b0 int, b1 int, b2 int, b3 int"
 
 def media_dhash(media: DataFrame) -> DataFrame:
     """Per-doc perceptual hash of the key frame, as PHASH_BANDS 16-bit
-    band ints (Arrow-batched kernel; integer math only)."""
+    band ints (integer math only)."""
     import numpy as np
 
     fs = PHASH_W * PHASH_H
     blk = PHASH_W // PHASH_GRID
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "b0", "b1", "b2", "b3")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                raw = bytes(payload)[:fs]
-                px = np.zeros(fs, dtype=np.int64)
-                px[:len(raw)] = np.frombuffer(raw, dtype=np.uint8)
-                g = px.reshape(PHASH_H, PHASH_W)
-                bs = (g.reshape(PHASH_GRID, blk, PHASH_GRID, blk)
-                      .sum(axis=(1, 3)))
-                bits = bs > np.roll(bs, -1, axis=1)
-                rows["doc_id"].append(doc_id)
-                for k in range(PHASH_BANDS):
-                    v = 0
-                    for dr in range(2):
-                        for c in range(PHASH_GRID):
-                            if bits[2 * k + dr, c]:
-                                v |= 1 << (dr * PHASH_GRID + c)
-                    rows[f"b{k}"].append(v)
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes):
+        raw = payload[:fs]
+        px = np.zeros(fs, dtype=np.int64)
+        px[:len(raw)] = np.frombuffer(raw, dtype=np.uint8)
+        bs = px.reshape(PHASH_GRID, blk, PHASH_GRID, blk).sum(axis=(1, 3))
+        bits = bs > np.roll(bs, -1, axis=1)
+        return [tuple(sum(1 << (dr * PHASH_GRID + c)
+                          for dr in range(2) for c in range(PHASH_GRID)
+                          if bits[2 * k + dr, c])
+                      for k in range(PHASH_BANDS))]
 
-    return media.mapInPandas(kernel, schema=PHASH_SCHEMA)
+    return _codec_kernel(media, PHASH_SCHEMA, rows)
 
 
 def phash_near_pairs(media: DataFrame,

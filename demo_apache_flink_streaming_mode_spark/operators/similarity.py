@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
@@ -1264,7 +1265,14 @@ def binary_sign_words(vec_col: str, dim: int) -> list[Column]:
     ~dim*6 py4j round trips per call — measured ~1.9 s of pure
     plan-building per ``topk_binary_rerank`` (two calls) at dim=64
     (r12). SQL ``+`` parses left-associative, so the packing sum tree
-    — and therefore every word value — is identical either way."""
+    — and therefore every word value — is identical either way.
+
+    ``vec_col`` is interpolated into that SQL, so it must be a plain
+    identifier (``[A-Za-z_][A-Za-z0-9_]*``); anything else raises
+    ``ValueError`` instead of reaching the parser."""
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", vec_col):
+        raise ValueError(f"vec_col must be a plain identifier, got "
+                         f"{vec_col!r}")
     words = []
     for lo in range(0, dim, 32):
         terms = " + ".join(

@@ -34,25 +34,28 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# One conf stands for the whole RUNTIME_CONFS set: it is set with the
+# rest, and no engine code changes it.
+_SENTINEL_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to a session we did not create (driver
-    scenario). Memoized by an attribute on the session object (r12):
-    this runs on EVERY ``load_table`` call, and the 8 ``conf.set``
-    py4j round trips add up over a 192-query bench; the confs are
-    idempotent, so one application per live session wrapper is enough
-    (the marker dies with the object — no stale-id hazard; a fresh
-    wrapper around the same JVM session re-applies harmlessly)."""
-    if getattr(spark, "_graft_confs_applied", False):
-        return spark
+    scenario). This runs on EVERY ``load_table`` call, so a session
+    whose sentinel conf already reads ``"true"`` costs one ``conf.get``
+    py4j round trip instead of the full ``conf.set`` pass; a session
+    whose confs were reset since (a fresh session, or a mid-session
+    ``conf.unset``) fails the check and is repaired on the next call."""
+    try:
+        if spark.conf.get(_SENTINEL_CONF, None) == "true":
+            return spark
+    except Exception:
+        pass  # unreadable conf: re-apply below
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # non-runtime conf on this build; session default applies
-    try:
-        spark._graft_confs_applied = True
-    except Exception:
-        pass  # slotted/frozen session object: just re-apply next call
     return spark
 
 

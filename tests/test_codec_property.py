@@ -12,9 +12,11 @@ these drive the kernel functions directly, so hypothesis can shrink.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 import hypo
 from hypothesis import given, strategies as st
 
+from demo_apache_flink_streaming_mode_spark.operators import bitstream as bs
 from demo_apache_flink_streaming_mode_spark.operators import multimodal as mm
 
 # byte payloads biased toward codec-hostile shapes: empty-adjacent
@@ -196,14 +198,14 @@ def test_huff_table_rejects_oversubscribed_lengths():
     30/32, the degenerate one-code dynamic table — still build."""
     import pytest as _pytest
     with _pytest.raises(ValueError, match="over-subscribed"):
-        mm._huff_table([1, 1, 1])              # three 1-bit codes
+        bs.canonical_table([1, 1, 1])           # three 1-bit codes
     with _pytest.raises(ValueError, match="over-subscribed"):
-        mm._huff_table([1, 2, 2, 2])           # Kraft sum 9/8
-    assert mm._huff_table([1]) == {(1, 0): 0}  # one-code table: legal
-    fixed_dist = mm._huff_table([5] * 30)      # RFC fixed dist: 30/32
+        bs.canonical_table([1, 2, 2, 2])        # Kraft sum 9/8
+    assert bs.canonical_table([1]) == {(1, 0): 0}  # one-code table: legal
+    fixed_dist = bs.canonical_table([5] * 30)   # RFC fixed dist: 30/32
     assert len(fixed_dist) == 30
     # a complete 2-level tree builds and stays bijective
-    t = mm._huff_table([1, 2, 2])
+    t = bs.canonical_table([1, 2, 2])
     assert len(t) == 3 and sorted(t.values()) == [0, 1, 2]
 
 
@@ -563,7 +565,7 @@ def test_flac_utf8_number_roundtrip(n):
     """The UTF-8-style coded number round-trips over its full 36-bit
     domain and is length-minimal at the standard UTF-8 breakpoints."""
     enc = mm._flac_utf8(n)
-    got = mm._flac_read_utf8(mm._Bits(enc))
+    got = mm._flac_read_utf8(bs.MsbReader(enc))
     assert got == n
     want_len = next(k for k, bits in
                     ((1, 7), (2, 11), (3, 16), (4, 21), (5, 26), (6, 31),
@@ -1052,3 +1054,99 @@ def test_jpeg_dims_bounds():
     assert int(np.max(np.abs(px.astype(np.int32)))) <= mm.JPEG_ERR_BOUND
     with _pytest.raises(ValueError, match="65535"):
         mm._encode_jpeg(bytes(mm.JPEG_W * 0x10000))
+
+
+# --- the shared bitstream / entropy core (operators.bitstream) -----------
+
+fields = st.lists(st.integers(0, 40).flatmap(
+    lambda k: st.tuples(st.integers(0, (1 << k) - 1), st.just(k))),
+    max_size=200)
+
+
+@hypo.budget(100)
+@given(fields, st.sampled_from(["msb", "lsb"]))
+def test_bitstream_roundtrips_any_field_sequence(seq, order):
+    """Writer -> reader returns every (value, width) field, widths 0..40
+    mixed freely, in both bit orders; the padded tail reads back as
+    zeros and one more byte is a truncation error."""
+    w = bs.MsbWriter() if order == "msb" else bs.LsbWriter()
+    for v, k in seq:
+        w.put(v, k)
+    blob = w.flush()
+    assert len(blob) == (sum(k for _, k in seq) + 7) // 8
+    r = (bs.MsbReader if order == "msb" else bs.LsbReader)(
+        blob, what="test stream")
+    assert [r.bits(k) for _, k in seq] == [v for v, _ in seq]
+    assert r.bits(-sum(k for _, k in seq) % 8) == 0
+    with pytest.raises(ValueError, match="truncated test stream"):
+        r.bits(8)
+
+
+@hypo.budget(60)
+@given(st.lists(st.integers(0, 200), max_size=60), fields)
+def test_msb_unary_roundtrips_between_fields(qs, seq):
+    """The byte-at-a-time unary reader counts runs of any length,
+    across byte boundaries, interleaved with ordinary fields."""
+    w = bs.MsbWriter()
+    for q, (v, k) in zip(qs, seq + [(0, 0)] * len(qs)):
+        w.unary(q)
+        w.put(v, k)
+    r = bs.MsbReader(w.flush())
+    for q, (v, k) in zip(qs, seq + [(0, 0)] * len(qs)):
+        assert r.unary() == q
+        assert r.bits(k) == v
+
+
+@hypo.budget(100)
+@given(st.binary(max_size=300))
+def test_jpeg_stuff_unstuff_roundtrip(scan):
+    """Stuffing leaves no 0xFF that could read as a marker, and the
+    unstuff of the stuffed scan followed by EOI is the scan."""
+    stuffed = mm._jpeg_stuff(scan)
+    assert all(stuffed[i + 1] == 0 for i in range(len(stuffed))
+               if stuffed[i] == 0xFF)
+    assert mm._jpeg_unstuff(stuffed + b"\xff\xd9") == scan
+    assert mm._jpeg_unstuff(stuffed) == scan      # no EOI: to the end
+
+
+@hypo.budget(60)
+@given(st.binary(max_size=100), st.integers(0x01, 0xFE).filter(
+    lambda m: m != 0xD9))
+def test_jpeg_unstuff_rejects_marker_inside_scan(scan, marker):
+    with pytest.raises(ValueError, match="marker inside scan data"):
+        mm._jpeg_unstuff(mm._jpeg_stuff(scan) + bytes([0xFF, marker])
+                         + b"\xff\xd9")
+
+
+@hypo.budget(100)
+@given(st.lists(st.integers(-(1 << 20), 1 << 20), max_size=80))
+def test_rice_roundtrips_signed_ints(vals):
+    w = bs.MsbWriter()
+    bs.rice_put(w, vals)
+    w.put(0b101, 3)                               # a field after the run
+    r = bs.MsbReader(w.flush())
+    assert bs.rice_get(r, len(vals)) == vals
+    assert r.bits(3) == 0b101
+    assert all(bs.unzigzag(bs.zigzag(v)) == v for v in vals)
+
+
+@hypo.budget(100)
+@given(st.lists(st.integers(1, 400), min_size=1, max_size=40))
+def test_canonical_table_inverts_to_encode_table(freqs):
+    """Lengths from real frequencies (always a complete prefix code):
+    the encode table is the exact inverse of the decode table, and
+    every symbol encodes and decodes back through ``read_symbol``."""
+    from demo_apache_flink_streaming_mode_spark.operators import (
+        compression as cz)
+    lengths = cz._huffman_lengths(freqs, 20)
+    table = bs.canonical_table(lengths)
+    enc = bs.encode_table(table)
+    assert {(ln, code): s for s, (code, ln) in enc.items()} == table
+    assert sorted(enc) == list(range(len(lengths)))
+    assert all(enc[s][1] == ln for s, ln in enumerate(lengths))
+    w = bs.MsbWriter()
+    syms = list(range(len(lengths))) * 2
+    for s in syms:
+        w.put(*enc[s])
+    r = bs.MsbReader(w.flush())
+    assert [bs.read_symbol(r, table, 20) for _ in syms] == syms

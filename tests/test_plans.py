@@ -254,3 +254,18 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
     finally:
         spark.conf.set(app, old_app)
         spark.conf.set(bc, old_bc)
+
+
+def test_load_table_repairs_reset_runtime_confs(spark):
+    """A runtime conf reset in the middle of a session is repaired on
+    the next ``load_table``: ensure_runtime_confs checks its sentinel
+    conf on every call instead of remembering that it ran once."""
+    from demo_apache_flink_streaming_mode_spark.session import RUNTIME_CONFS
+    from demo_apache_flink_streaming_mode_spark.sources.batch import load_table
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert RUNTIME_CONFS[key] == "true"
+    spark.conf.unset(key)
+    assert spark.conf.get(key) != "true"
+    events = load_table(spark, SF, "events")
+    assert spark.conf.get(key) == "true"
+    assert dict(events.dtypes)["ts"] == "timestamp"

@@ -170,3 +170,14 @@ def test_topk_binary_rerank_matches_reference(spark, rows, k, mult):
                spark.createDataFrame(rows, schema), k,
                dim=DIM, mult=mult).collect()}
     assert got == want
+
+
+def test_binary_sign_words_rejects_non_identifier_columns(spark):
+    """``vec_col`` is interpolated into the packing SQL, so a backticked
+    or dotted name raises ValueError instead of reaching the parser; a
+    plain identifier builds one word per 32 dims."""
+    import pytest
+    for bad in ("`_raw`", "emb.vec", "x` + 1 --"):
+        with pytest.raises(ValueError, match="identifier"):
+            S.binary_sign_words(bad, 8)
+    assert len(S.binary_sign_words("_raw", 40)) == 2

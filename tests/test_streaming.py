@@ -722,7 +722,7 @@ def test_hll_registers_streaming_parity(spark, batch_events, stream_events):
     assert final == want
 
 
-def test_cms_sketch_streaming_parity(spark, batch_events, stream_events):
+def test_cms_sketch_op_streaming_parity(spark, batch_events, stream_events):
     """CMS counter build (operators.sketches.cms_sketch) is a plain
     keyed count -> runs unchanged as an update-mode streaming agg; the
     final per-(row, bucket) counters must equal the batch sketch over

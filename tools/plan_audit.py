@@ -35,10 +35,10 @@ def audit() -> str:
     # AQE defers codegen annotation to stage execution, so the audit
     # reads the static plan (same operators/exchanges, codegen spans
     # visible); the engine itself runs with AQE on (session.py).
-    # ensure_runtime_confs is memoized per session since r12 (so the
-    # direct spark.conf override below sticks on its own); the
-    # RUNTIME_CONFS patch stays as belt-and-braces for a fresh
-    # session wrapper re-applying them.
+    # ensure_runtime_confs skips re-application while its sentinel conf
+    # (nanosAsLong) still reads "true" (so the direct spark.conf
+    # override below sticks on its own); the RUNTIME_CONFS patch keeps
+    # the override if a reset sentinel triggers a re-application.
     sess.RUNTIME_CONFS = dict(sess.RUNTIME_CONFS,
                               **{"spark.sql.adaptive.enabled": "false"})
     spark.conf.set("spark.sql.adaptive.enabled", "false")
